@@ -1,0 +1,32 @@
+package perfbench
+
+/** Minimal JSON rendering for the harness's result file. Values are
+  * `null`/None, Boolean, any numeric type, String, Option, Seq or Map with
+  * String keys; doubles keep every digit (`Double.toString`).
+  */
+object Json {
+  def render(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => render(x)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case f: Float => render(f.toDouble)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case s: String => quote(s)
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => quote(k.toString) + ":" + render(x) }.mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(render).mkString("[", ",", "]")
+    case other => quote(other.toString)
+  }
+
+  def quote(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }.mkString("\"", "", "\"")
+}
