@@ -84,31 +84,32 @@ object Bench {
     selected.foreach { case (_, fn) =>
       try fn(spark, warmDir).queryExecution.toRdd.count() catch { case _: Throwable => () }
     }
-    // drop warmup-scale cached intermediates before measuring: they'd
-    // hold executor memory for the whole measured pass otherwise
-    queries.DedupQueries.unpersistShared()
+    // drop warmup-scale intermediates before measuring: they'd hold
+    // executor memory for the whole measured pass otherwise
+    Intermediates.releaseAll()
 
     // Min of 3 repetitions per query: the host shows heavy run-to-run
     // variance (co-tenant load), and the minimum is the standard estimator
     // of steady-state engine cost under external noise. A query that throws
     // is reported in "failed" rather than recorded as a near-zero timing
     // (ADVICE r1: silent catch made breakage look like a speedup).
-    // Release tracked caches at every FAMILY boundary: releasing only at
-    // battery start/end let all 182 queries' tracked(...cache()) relations
-    // accumulate across the measured pass, and once residency crossed the
-    // eviction threshold the biggest cache consumer (v10) thrashed —
-    // recorded 10.97 s vs 3.28 s in an isolated JVM (r12 verdict #1).
-    // A family = the owning query MODULE (the unit that shares tracked
-    // caches), looked up via SparkEntry.moduleOf — not parsed from the
-    // name prefix. Sorting by (module, name) keeps families contiguous by
-    // construction. Cross-family sharing just re-persists on next use
-    // (min-of-3 absorbs the rebuild in run 1, same as a cold family start).
+    // Release materialized intermediates (Intermediates.cache/checkpoint)
+    // at every FAMILY boundary: releasing only at battery start/end let
+    // every query's cached relations accumulate across the measured pass,
+    // and once residency crossed the eviction threshold the biggest cache
+    // consumer (v10) thrashed — recorded 10.97 s vs 3.28 s in an isolated
+    // JVM (r12 verdict #1). A family = the owning query MODULE (the unit
+    // that shares intermediates), looked up via SparkEntry.moduleOf — not
+    // parsed from the name prefix. Sorting by (module, name) keeps families
+    // contiguous by construction. Cross-family sharing just re-persists on
+    // next use (min-of-3 absorbs the rebuild in run 1, same as a cold
+    // family start).
     var prevFamily: Int = -1
     val results = selected.toSeq
       .sortBy { case (name, _) => (SparkEntry.moduleOf(name), name) }
       .map { case (name, fn) =>
       val family = SparkEntry.moduleOf(name)
-      if (prevFamily != -1 && family != prevFamily) queries.DedupQueries.unpersistShared()
+      if (prevFamily != -1 && family != prevFamily) Intermediates.releaseAll()
       if (family != prevFamily)
         // pre-build the family's SHARED caches outside any timed rep: the
         // cold build landing inside the first sharer's min-of-3 let one
@@ -143,7 +144,7 @@ object Bench {
       System.err.println(s"[bench] $name ${best.map(s4).getOrElse("FAILED")}")
       (name, best)
     }
-    queries.DedupQueries.unpersistShared()
+    Intermediates.releaseAll()
     val ok = results.collect { case (k, Some(v)) => k -> v }
     val failed = results.collect { case (k, None) => k }
     // 4-decimal (0.1 ms) timings: full-double rendering made the 104-query

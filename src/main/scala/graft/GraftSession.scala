@@ -26,7 +26,7 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // let AQE re-plan INSIDE cached relations: off (the default), a
-      // .cache() materializes with the raw spark.sql.shuffle.partitions
+      // cached relation materializes with the raw spark.sql.shuffle.partitions
       // fan-out, and every downstream consumer — including each broadcast
       // subquery, which is its own job — pays a partition-count-sized task
       // wave to scan a cache whose bytes fit in a handful of partitions.

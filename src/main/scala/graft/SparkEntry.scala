@@ -31,19 +31,19 @@ object SparkEntry {
       (YqlTextQueries.queries, YqlTextQueries.oracles)
     )
 
-  /** Query name → owning module index. The bench derives its cache-release
-    * family boundaries from this (the module is the unit that shares
-    * tracked caches), never from parsing name prefixes — a future
-    * multi-letter family sharing a first letter would have silently merged
-    * letter-parsed boundaries.
+  /** Query name → owning module index. The bench derives its release
+    * family boundaries ([[Intermediates.releaseAll]]) from this (the module
+    * is the unit that shares materialized intermediates), never from
+    * parsing name prefixes — a future multi-letter family sharing a first
+    * letter would have silently merged letter-parsed boundaries.
     */
   private[graft] lazy val moduleOf: Map[String, Int] =
     modules.zipWithIndex.flatMap { case ((qs, _), i) => qs.keys.map(_ -> i) }.toMap
 
   /** Module index → shared-cache pre-builder, invoked by Bench at family
     * entry OUTSIDE any query's timed reps. Only modules whose queries
-    * share tracked caches need one (today: CorpusQueries — v10/v12 share
-    * the v10Stages relations, and the cold build landing inside one
+    * share cached intermediates need one (today: CorpusQueries — v10/v12
+    * share the v10Stages relations, and the cold build landing inside one
     * query's min-of-3 made a single co-tenant spike inflate two headline
     * numbers at once in r12/r14/r15). Keyed via [[moduleOf]] so a module
     * reorder can't silently detach the hook.

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Intermediates
 import graft.functions.Text
 import graft.sources.Tables
 
@@ -391,7 +392,7 @@ object Bpe {
   /** Lineage-truncation period for deep distributed runs: each round adds
     * one narrow `replace` to the segmentation column, and past ~100 rounds
     * the re-analyzed plan tree (not the data) starts to dominate round
-    * latency. A localCheckpoint every 64 rounds materializes the type
+    * latency. A checkpoint every 64 rounds materializes the type
     * table (types ≪ tokens — Zipf — so this is vocabulary-sized, never
     * corpus-sized) and frees the previous checkpoint's blocks.
     */
@@ -454,7 +455,7 @@ object Bpe {
     var cur = types
       .select(col("cnt"),
         regexp_replace(col("w"), "(?s)(.)", S + "$1" + E).as("sym"))
-      .localCheckpoint()
+      .transform(Intermediates.checkpoint)
     var pinned = cur // the checkpoint whose blocks we currently own
     val merges = mutable.ArrayBuffer.empty[(String, String, Long)]
     val roundSecs = mutable.ArrayBuffer.empty[Double]
@@ -483,33 +484,15 @@ object Bpe {
             replace(col("sym"), lit(S + a + E + S + b + E), lit(S + a + b + E)))
           r += 1
           if (r % DistCheckpointEvery == 0 && r < rounds) {
-            val ck = cur.localCheckpoint()
-            freeCheckpoint(pinned)
+            val ck = Intermediates.checkpoint(cur)
+            Intermediates.release(pinned)
             pinned = ck; cur = ck
           }
           roundSecs += (System.nanoTime() - t0) / 1e9
         }
       }
-    } finally freeCheckpoint(pinned)
+    } finally Intermediates.release(pinned)
     (merges.toSeq, roundSecs.toSeq)
-  }
-
-  /** Release a localCheckpoint's executor blocks (same contract and
-    * warning as TextQueries.freeLocalCheckpoint: `df.unpersist()` is a
-    * CacheManager no-op for checkpoints — the blocks live in the
-    * LogicalRDD leaf).
-    */
-  private def freeCheckpoint(df: DataFrame): Unit = {
-    var freed = 0
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = true); freed += 1
-      case _ => ()
-    }
-    if (freed == 0)
-      System.err.println(
-        "WARN graft: Bpe.freeCheckpoint found no LogicalRDD leaf to unpersist — " +
-          "checkpoint blocks stay resident (plan: " + df.queryExecution.analyzed.nodeName + ")")
   }
 
   /** Byte-level oracle CTEs: pretokenize with the SAME regex, hex-pair

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Intermediates
+
 /** Distributed connected components by min-label propagation — the cluster
   * step of near-duplicate deduplication: LSH/SimHash emit *pairs*; turning
   * pairs into duplicate *groups* (keep one survivor per group) is a
@@ -17,7 +19,7 @@ import org.apache.spark.sql.functions._
   * for adversarial long-chain graphs the large-star/small-star variant
   * (O(log n) rounds) would replace the propagation step, same join shape.
   *
-  * `localCheckpoint` truncates the lineage each round — without it the plan
+  * A checkpoint truncates the lineage each round — without it the plan
   * doubles per iteration and the final job replays every round's shuffle.
   */
 object ConnectedComponents {
@@ -32,13 +34,13 @@ object ConnectedComponents {
     val e = edges.toDF("a", "b")
     val und = e.union(e.select(col("b"), col("a")))
       .toDF("src", "dst").distinct()
-      .localCheckpoint(true)
+      .transform(Intermediates.checkpoint)
 
     // seed with min(self, neighbors) — the first propagation round folded
     // into initialization (one aggregation instead of join+agg)
     var labels = und.groupBy(col("src")).agg(min(col("dst")).as("mn"))
       .select(col("src").as("id"), least(col("src"), col("mn")).as("comp"))
-      .localCheckpoint(true)
+      .transform(Intermediates.checkpoint)
 
     // Convergence via the label sum: labels are per-node non-increasing, so
     // the sum strictly decreases every round that changes anything — an
@@ -55,7 +57,7 @@ object ConnectedComponents {
         .select(col("dst").as("id"), col("comp"))
       labels = labels.select("id", "comp").union(msgs)
         .groupBy("id").agg(min("comp").as("comp"))
-        .localCheckpoint(true)
+        .transform(Intermediates.checkpoint)
       val s = labelSum(labels)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
@@ -147,7 +149,7 @@ object ConnectedComponents {
     // for nodes, once for the normalized contraction input. nodes itself
     // no longer needs its own eager checkpoint: it re-derives from e0 with
     // one cheap explode+distinct at the final join.
-    val e0 = edges.toDF("a", "b").localCheckpoint(true)
+    val e0 = Intermediates.checkpoint(edges.toDF("a", "b"))
     val nodes = e0
       .select(explode(array(col("a"), col("b"))).as("id")).distinct()
     // normalized edge list; self-loops dropped (their nodes are restored
@@ -159,7 +161,7 @@ object ConnectedComponents {
         .where(col("a") =!= col("b"))
         .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
         .distinct())
-      .localCheckpoint(true)
+      .transform(Intermediates.checkpoint)
 
     var iter = 0
     var converged = isStarForest(e)
@@ -186,7 +188,7 @@ object ConnectedComponents {
         .where(col("a") =!= col("b"))
         .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
         .distinct()
-        .localCheckpoint(true)
+        .transform(Intermediates.checkpoint)
 
       e = small
       converged = isStarForest(e)

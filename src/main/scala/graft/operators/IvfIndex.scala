@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Intermediates
 import graft.functions.Vectors
 
 /** Persistent IVF (inverted-file) ANN index — the production form of the
@@ -177,16 +178,16 @@ final class IvfIndex private (val base: String) {
     val vecs = assignments(spark)
       .where(col("cid").isin(hotIds.map(Integer.valueOf): _*))
       .select("vec_id", "v", "n2")
-      .localCheckpoint() // the delete below must not re-trigger this scan
+      .transform(Intermediates.checkpoint) // the delete below must not re-trigger this scan
     var cents = vecs
       .withColumn("h", md5(concat(lit("ivf:rc:"), col("vec_id").cast("string"))))
       .orderBy("h").limit(nNew)
       .withColumn("cid", (row_number().over(
         Window.partitionBy(substring(col("h"), 1, 0)).orderBy("h")) + maxCid).cast("int"))
       .select(col("cid"), col("v").as("cv"), col("n2").as("cn2"))
-      .localCheckpoint()
+      .transform(Intermediates.checkpoint)
     (1 to lloydIters).foreach { _ =>
-      cents = IvfIndex.lloydStep(cents, vecs).localCheckpoint()
+      cents = Intermediates.checkpoint(IvfIndex.lloydStep(cents, vecs))
     }
 
     // cold centroids verbatim + new sub-cells; materialize before the
@@ -194,9 +195,9 @@ final class IvfIndex private (val base: String) {
     val newCentroids = centroids(spark)
       .where(!col("cid").isin(hotIds.map(Integer.valueOf): _*))
       .unionByName(cents)
-      .localCheckpoint()
+      .transform(Intermediates.checkpoint)
 
-    val reassigned = IvfIndex.assignTo(cents, vecs).localCheckpoint()
+    val reassigned = Intermediates.checkpoint(IvfIndex.assignTo(cents, vecs))
     reassigned.write.mode(SaveMode.Append).partitionBy("cid").parquet(s"$base/assignments")
     val hasPq = graft.sources.FsUtil.listDir(spark, base).contains("codebooks")
     if (hasPq) {
@@ -366,21 +367,35 @@ object IvfIndex {
         case (r, i) => org.apache.spark.sql.Row(i, r.getSeq[Double](1), r.getDouble(2))
       }: _*), centSchema)
 
-    (1 to lloydIters).foreach { _ =>
-      cents = lloydStep(cents, e).localCheckpoint() // truncate lineage between rounds
-    }
-
-    // the two persisted outputs are independent of each other (assignTo
-    // consumes the in-memory cents, not the centroids files) — overlap
-    // them so the tiny centroid write's job+commit latency hides under
-    // the corpus-sized assignment pass (guide §2.6)
-    val fCent = scala.concurrent.Future {
-      cents.write.mode(SaveMode.Overwrite).parquet(s"$base/centroids")
-    }(IvfIndex.WriteEc)
-    assignTo(cents, e).write.mode(SaveMode.Overwrite)
-      .partitionBy("cid").parquet(s"$base/assignments")
-    scala.concurrent.Await.result(fCent, scala.concurrent.duration.Duration.Inf)
+    // the round checkpoints live until both writes below are done, and
+    // are released on every exit path
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try {
+      (1 to lloydIters).foreach { _ =>
+        cents = Intermediates.checkpoint(lloydStep(cents, e)) // truncate lineage between rounds
+        rounds += cents
+      }
+      // the two persisted outputs are independent of each other (assignTo
+      // consumes the in-memory cents, not the centroids files) — overlap
+      // them so the tiny centroid write's job+commit latency hides under
+      // the corpus-sized assignment pass (guide §2.6)
+      overlapped(cents.write.mode(SaveMode.Overwrite).parquet(s"$base/centroids")) {
+        assignTo(cents, e).write.mode(SaveMode.Overwrite)
+          .partitionBy("cid").parquet(s"$base/assignments")
+      }
+    } finally rounds.foreach(Intermediates.release)
     new IvfIndex(base)
+  }
+
+  /** Run `main` on the caller's thread while `side` runs on [[WriteEc]].
+    * `side` always finishes before this returns, so no write outlives a
+    * failed build; `main`'s exception wins, and `side`'s propagates when
+    * `main` succeeded.
+    */
+  private def overlapped(side: => Unit)(main: => Unit): Unit = {
+    val f = scala.concurrent.Future(side)(WriteEc)
+    try main finally scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf)
+    scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
   }
 
   /** One Lloyd update: assign, then per-(cid, dim) average back into
@@ -470,68 +485,58 @@ object IvfIndex {
     // assignments parquet (3 reads + their AQE sub-jobs per build — the
     // r17 verdict's job-count item); vec_id/cid are 12 bytes next to the
     // d-double uq, so carrying them through the checkpoint is free.
-    val uqDf = assigned.select(col("vec_id"), col("cid"), unitQ.as("uq"))
-      .localCheckpoint()
+    val uqDf = Intermediates.checkpoint(
+      assigned.select(col("vec_id"), col("cid"), unitQ.as("uq")))
 
-    // init: the ks lowest vec_ids' quantized unit subvectors (driver-sized)
-    val seeds = uqDf.orderBy("vec_id").limit(ks)
-      .select(col("uq"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    require(seeds.length == ks, s"PQ codebook needs $ks seed vectors, corpus has ${seeds.length}")
-    val dim = seeds.head.length
-    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val ds = dim / m
-    var cb: Array[Array[Array[Double]]] =
-      Array.tabulate(m)(mi => seeds.map(_.slice(mi * ds, (mi + 1) * ds)))
+    try {
+      // init: the ks lowest vec_ids' quantized unit subvectors (driver-sized)
+      val seeds = uqDf.orderBy("vec_id").limit(ks)
+        .select(col("uq"))
+        .collect().map(_.getSeq[Double](0).toArray)
+      require(seeds.length == ks, s"PQ codebook needs $ks seed vectors, corpus has ${seeds.length}")
+      val dim = seeds.head.length
+      require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
+      val ds = dim / m
+      var cb: Array[Array[Array[Double]]] =
+        Array.tabulate(m)(mi => seeds.map(_.slice(mi * ds, (mi + 1) * ds)))
 
-    for (_ <- 1 to pqIters) {
-      // one pass: argmin codes for all M subspaces, then per-(m, code, dim)
-      // exact integer sums — M·Ks·ds cells to the driver, never data-sized
-      val cbCells = uqDf.select(codesOf(cb, col("uq")).as("codes"), col("uq"))
-        .select(posexplode(col("codes")).as(Seq("mi", "c")), col("uq"))
-        .select(col("mi"), col("c"),
-          posexplode(slice(col("uq"), col("mi") * ds + 1, lit(ds))).as(Seq("d", "x")))
-        .groupBy("mi", "c", "d")
-        .agg(sum("x").as("s"), count(lit(1)).as("n"))
-        .collect()
-      val next = cb.map(_.map(_.clone())) // empty cells keep their codeword
-      cbCells.foreach { r =>
-        next(r.getInt(0))(r.getInt(1))(r.getInt(2)) =
-          math.floor(r.getDouble(3) / r.getLong(4))
+      for (_ <- 1 to pqIters) {
+        // one pass: argmin codes for all M subspaces, then per-(m, code, dim)
+        // exact integer sums — M·Ks·ds cells to the driver, never data-sized
+        val cbCells = uqDf.select(codesOf(cb, col("uq")).as("codes"), col("uq"))
+          .select(posexplode(col("codes")).as(Seq("mi", "c")), col("uq"))
+          .select(col("mi"), col("c"),
+            posexplode(slice(col("uq"), col("mi") * ds + 1, lit(ds))).as(Seq("d", "x")))
+          .groupBy("mi", "c", "d")
+          .agg(sum("x").as("s"), count(lit(1)).as("n"))
+          .collect()
+        val next = cb.map(_.map(_.clone())) // empty cells keep their codeword
+        cbCells.foreach { r =>
+          next(r.getInt(0))(r.getInt(1))(r.getInt(2)) =
+            math.floor(r.getDouble(3) / r.getLong(4))
+        }
+        cb = next
       }
-      cb = next
-    }
 
-    import spark.implicits._
-    // codebooks (driver-sized) and codes (corpus-sized) writes are
-    // independent — overlap them (guide §2.6), then read the codebooks
-    // back once into the serving memo
-    val fCb = scala.concurrent.Future {
-      (for (mi <- 0 until m; c <- 0 until ks) yield (mi, c, cb(mi)(c).toSeq))
-        .toDF("m", "c", "cw").repartition(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$base/codebooks")
-    }(WriteEc)
-    uqDf.select(col("vec_id"), codesOf(cb, col("uq")).as("codes"), col("cid"))
-      .write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(s"$base/codes")
-    scala.concurrent.Await.result(fCb, scala.concurrent.duration.Duration.Inf)
-    freeCheckpoint(uqDf)
+      import spark.implicits._
+      // codebooks (driver-sized) and codes (corpus-sized) writes are
+      // independent — overlap them (guide §2.6), then read the codebooks
+      // back once into the serving memo
+      overlapped {
+        (for (mi <- 0 until m; c <- 0 until ks) yield (mi, c, cb(mi)(c).toSeq))
+          .toDF("m", "c", "cw").repartition(1)
+          .write.mode(SaveMode.Overwrite).parquet(s"$base/codebooks")
+      } {
+        uqDf.select(col("vec_id"), codesOf(cb, col("uq")).as("codes"), col("cid"))
+          .write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(s"$base/codes")
+      }
+    } finally Intermediates.release(uqDf)
     // the codebooks this instance just trained and wrote — serving through
     // the memo skips one read+collect job per query batch (disk stays the
     // source of truth: a LOADED index still reads it)
     idx.cbMemo = readCodebooks(spark, base)
     idx
   }
-
-  /** Release a localCheckpoint's executor blocks (`df.unpersist()` is a
-    * CacheManager no-op for checkpoints — the blocks live in the
-    * LogicalRDD leaf; same contract as Bpe.freeCheckpoint).
-    */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** Load the persisted codebooks as (codewords-by-c, m) per subspace —
     * bounded by M·Ks·ds doubles, never data-sized.

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Intermediates
 import graft.functions.Text
 import graft.sources.Tables
 
@@ -458,13 +459,13 @@ object CorpusQueries {
   /** The v10 stage relations, shared by the manifest form (v10) and the
     * per-doc attrition report (v12). Spark's cache manager dedupes
     * structurally-equal cached plans, so both consumers share one
-    * execution of the tracked intermediates within a battery run.
+    * execution of the cached intermediates within a battery family.
     */
   private case class V10Stages(corpus: DataFrame, s1: DataFrame, neardup: DataFrame,
     s2: DataFrame, s3: DataFrame, contaminated: DataFrame, s4: DataFrame, s5: DataFrame)
 
   private def v10Stages(spark: SparkSession, dir: String): V10Stages = {
-    import DedupQueries.{MinhashFns, BandRows, ShingleDfCap, MersenneP, affineA, affineB, tracked}
+    import DedupQueries.{MinhashFns, BandRows, ShingleDfCap, MersenneP, affineA, affineB}
     val docs = Tables.documents(spark, dir).select("doc_id", "source", "text")
     val corpus = docs.unionByName(
       docs.where(col("doc_id") % 10 === 0)
@@ -475,8 +476,8 @@ object CorpusQueries {
         Window.partitionBy(md5(Text.normText(col("text")))).orderBy("doc_id")))
       .where(col("rn") === 1).drop("rn")
     // tokenize ONCE; shingles, LM bigrams, and decontamination grams all read this
-    val toks = tracked(s1
-      .select(col("doc_id"), col("source"), Text.tokens(col("text")).as("tk")).cache())
+    val toks = Intermediates.cache(s1
+      .select(col("doc_id"), col("source"), Text.tokens(col("text")).as("tk")))
     // stage 2 — MinHash-LSH near-dedup over the exact-dedup survivors.
     // The boilerplate cap is RELATIVE (≥ 2% of the corpus, floor 100): a
     // fixed absolute cap is corpus-dependent — at the 100× probe a df=100
@@ -500,9 +501,9 @@ object CorpusQueries {
     // DF cap as ONE window pass over the exploded shingles (shuffle key
     // sh64 — fine-grained), not a groupBy + self-join re-running the
     // explode twice; same semantics, one lineage execution
-    val sh = tracked(sh0
+    val sh = Intermediates.cache(sh0
       .withColumn("df", count(lit(1)).over(Window.partitionBy("sh64")))
-      .where(col("df") <= dfCap).select("doc_id", "sh64").cache())
+      .where(col("df") <= dfCap).select("doc_id", "sh64"))
     val hashed = sh
       .withColumn("h32", col("sh64").bitwiseAND(lit(0xFFFFFFFFL)))
       .select(col("doc_id") +: (0 until MinhashFns).map(j =>
@@ -550,19 +551,19 @@ object CorpusQueries {
       .join(sh.as("y"), col("y.doc_id") === col("db") && col("y.sh64") === col("x.sh64"))
       .groupBy("da", "db").agg(count(lit(1)).as("i"))
     // the id-list / per-doc-score stage outputs (neardup, lm,
-    // contaminated) are tracked-cached too: they're tiny (≤ one row per
+    // contaminated) are cached too: they're tiny (≤ one row per
     // doc) but their LINEAGE is the expensive part of the chain (band
     // join + verify; bigram explode; 8-gram explode + eval join) — v12
     // replays all three without these, and a battery run pays the chain
     // twice (v12 measured 6.1 s vs v10's 3.5 s before the caches)
-    val neardup = tracked(inter
+    val neardup = Intermediates.cache(inter
       .join(sizes.withColumnRenamed("doc_id", "da").withColumnRenamed("n", "na"), "da")
       .join(sizes.withColumnRenamed("doc_id", "db").withColumnRenamed("n", "nb"), "db")
       .where(col("i") * lit(1.0) / (col("na") + col("nb") - col("i")) >= 0.5)
-      .select(col("db").as("doc_id")).distinct().cache())
+      .select(col("db").as("doc_id")).distinct())
     // persisted: the LM stage (tok2/big), the quality join (s3), and the
     // decontamination grams all read the deduped survivor relation
-    val s2 = tracked(toks.join(neardup, Seq("doc_id"), "left_anti").cache())
+    val s2 = Intermediates.cache(toks.join(neardup, Seq("doc_id"), "left_anti"))
     // stage 3 — quality gate: token floor + t9 LM score ≥ 30M ppb/bigram
     val tok2 = s2.where(size(col("tk")) >= 2)
     val big = tok2.select(col("doc_id"),
@@ -575,7 +576,7 @@ object CorpusQueries {
     val refCtx = refBig.groupBy("w1").agg(sum("b").as("c"))
     val vocab = tok2.where(col("doc_id") % 3 === 0)
       .select(explode(col("tk")).as("w")).agg(countDistinct("w").as("v"))
-    val lm = tracked(big
+    val lm = Intermediates.cache(big
       .join(refBig, Seq("w1", "w2"), "left")
       .join(refCtx, Seq("w1"), "left")
       .crossJoin(broadcast(vocab)) // 1-row scalar, benign
@@ -583,8 +584,7 @@ object CorpusQueries {
         floor(lit(1e9) * (coalesce(col("b"), lit(0L)) + lit(1L)) /
           (coalesce(col("c"), lit(0L)) + col("v"))).cast("long").as("ppb"))
       .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"), sum("ppb").as("score_ppb"))
-      .cache())
+      .agg(count(lit(1)).as("n_bigrams"), sum("ppb").as("score_ppb")))
     // RELATIVE LM gate: keep docs whose per-bigram average clears 90% of
     // the corpus-wide average. An absolute ppb floor is corpus-dependent —
     // add-one smoothing divides by (c + V), and V grows with the corpus,
@@ -607,8 +607,8 @@ object CorpusQueries {
     // benchmark set), never the raw crawl.
     val grams = s2.select(col("doc_id"), explode(Text.shingles(col("tk"), NGram)).as("gram"))
     val ev = grams.where(col("doc_id") % 11 === 0).select("gram").distinct()
-    val contaminated = tracked(grams.where(col("doc_id") % 11 =!= 0)
-      .join(ev, "gram").select("doc_id").distinct().cache())
+    val contaminated = Intermediates.cache(grams.where(col("doc_id") % 11 =!= 0)
+      .join(ev, "gram").select("doc_id").distinct())
     val s4 = s3.where(col("doc_id") % 11 =!= 0)
       .join(contaminated, Seq("doc_id"), "left_anti")
     // stage 5 — temperature mix (α = 0.5 → √-flattened integer-ppm rates) + split.
@@ -624,23 +624,22 @@ object CorpusQueries {
         floor(lit(1000000.0) * sqrt(col("min_tokens") / col("src_tokens")))
           .cast("long").as("rate_ppm"))
     val bucket = pmod(Text.md5Long(col("doc_id").cast("string")), lit(100L))
-    val s5 = tracked(s4.join(broadcast(rates), Seq("source"))
+    val s5 = Intermediates.cache(s4.join(broadcast(rates), Seq("source"))
       .where(pmod(Text.md5Long(concat(lit("v10:"), col("doc_id").cast("string"))),
         lit(1000000L)) < col("rate_ppm"))
       .withColumn("split_idx",
-        when(bucket < 80, 0).when(bucket < 90, 1).otherwise(2))
-      .cache())
+        when(bucket < 80, 0).when(bucket < 90, 1).otherwise(2)))
     V10Stages(corpus, s1, neardup, s2, s3, contaminated, s4, s5)
   }
 
-  /** Pre-build the tracked stage caches v10 and v12 share. Bench invokes
+  /** Pre-build the stage caches v10 and v12 share. Bench invokes
     * this at FAMILY ENTRY, outside any query's timed reps: the one cold
     * build of the shared relations otherwise lands inside whichever
     * query's min-of-3 runs first, so a single co-tenant spike during that
     * build inflates BOTH headline numbers at once (v10/v12 needed noise
     * adjudication in r12, r14, and r15 for exactly this reason).
-    * Materializing s5 — the deepest tracked cache — executes the whole
-    * chain, populating every upstream tracked InMemoryRelation
+    * Materializing s5 — the deepest cache — executes the whole chain,
+    * populating every upstream cached InMemoryRelation
     * (toks, sh, neardup, s2, lm, contaminated) in one pass.
     */
   def prewarmShared(spark: SparkSession, dir: String): Unit =
@@ -840,7 +839,7 @@ object CorpusQueries {
     * distributed prefix sum (never a data-sized single-partition
     * window). The scored relation feeds THREE consumers (the value
     * histogram, the corpus-size scalar, the final assignment join), so it
-    * is tracked-cached once: the t9 scoring lineage — the expensive
+    * is cached once: the t9 scoring lineage — the expensive
     * tokenize + explode + two model joins — executes once, and the 1-row
     * `n` broadcast re-reads the doc-id-sized cache instead of paying a
     * second full tokenize of `documents` (r12 verdict #4). Per-doc
@@ -848,11 +847,10 @@ object CorpusQueries {
     * value→bucket map.
     */
   def v13CcnetBuckets(spark: SparkSession, dir: String): DataFrame = {
-    import DedupQueries.tracked
-    val scored = tracked(
+    val scored = Intermediates.cache(
       TextQueries.t9Scores(spark, dir)
         .withColumn("avg_ppb", expr("score_ppb DIV n_bigrams"))
-        .select("doc_id", "avg_ppb").cache())
+        .select("doc_id", "avg_ppb"))
     val perV = scored.groupBy(col("avg_ppb").as("v")).agg(count(lit(1)).as("cnt"))
     // scored rows ARE the docs with ≥2 tokens (t9 filters size(tk) ≥ 2
     // before the bigram groupBy), mirroring the oracle's count over avgd

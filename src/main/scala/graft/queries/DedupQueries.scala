@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Intermediates
 import graft.functions.{Text, Vectors}
 import graft.sources.Tables
 
@@ -45,30 +46,6 @@ object DedupQueries {
     * prime); a_j < 2²⁹ keeps a_j·h32 < 2⁶² — no 64-bit overflow in either
     * engine, so the oracle reproduces every value exactly.
     */
-  /** Shared intermediates persisted across the d-family (shingles feed
-    * d2/d3; the SimHash signature feeds d5/d7/d8; the pair set feeds
-    * d7/d8/t5). Registered here so battery runners (Bench, Verify, specs)
-    * can release executor memory once the family is done — without a
-    * lifecycle hook, cache entries accumulate per (session, dir) for the
-    * life of the SparkSession.
-    */
-  private val persistedShared = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Register a persisted intermediate for family-boundary release AND
-    * rebase the returned frame onto its InMemoryRelation leaf
-    * ([[org.apache.spark.sql.GraftCacheBridge.cachedLeaf]]): downstream
-    * trees stay shallow, so the per-Dataset-op eager re-analysis cost —
-    * which the r17 PhaseTime profile measured at 3.5-6.6 s of driver
-    * build time per v10 construction, 5-10x its execution — collapses.
-    * Execution is unchanged (the cache manager would substitute the same
-    * IMR at planning time anyway); the lifecycle queue keeps the ORIGINAL
-    * handle so unpersist still resolves the registered entry.
-    */
-  private[queries] def tracked(df: DataFrame): DataFrame = {
-    persistedShared.add(df)
-    org.apache.spark.sql.GraftCacheBridge.cachedLeaf(df).getOrElse(df)
-  }
-
   /** Pin a COMPUTE-DENSE relation's partitioning to the configured shuffle
     * width on the given key columns. AQE's byte-based partition coalescing
     * sizes stages by bytes, so a stage whose per-row work is heavy but
@@ -87,22 +64,10 @@ object DedupQueries {
     // threw NumberFormatException at PLAN-BUILD time on a bad conf value
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, cols: _*)
 
-  /** [[computeWide]] gated on a `graft.pin.*` conf (default ON): every pin
-    * is an empirical call — the r18 interleaved A/Bs overturned one of them
-    * (rawShingles) — so each stays independently measurable without a
-    * rebuild.
+  /** Release every materialized intermediate: a forwarder to
+    * [[graft.Intermediates.releaseAll]], kept for callers outside the engine.
     */
-  private def computeWideIf(flag: String)(df: DataFrame, cols: Column*): DataFrame =
-    if (df.sparkSession.conf.getOption(flag).forall(_.toBoolean))
-      computeWide(df, cols: _*) else df
-
-  /** Drop every cached intermediate this module has registered. Safe to
-    * call at any point: queries simply re-persist on next use.
-    */
-  def unpersistShared(): Unit = {
-    var df = persistedShared.poll()
-    while (df != null) { df.unpersist(blocking = false); df = persistedShared.poll() }
-  }
+  def unpersistShared(): Unit = graft.Intermediates.releaseAll()
 
   /** Budgets for the contractually-quadratic FULL-pair forms (d5, d6) —
     * two bounds, because candidates and output diverge by orders of
@@ -223,7 +188,7 @@ object DedupQueries {
     */
   /** Uncapped distinct (doc_id, sh64) — the raw relation both the capped
     * [[shinglesDf]] (d2/d3) and d19's lossless prefix join derive from;
-    * tracked cache so the scan+tokenize+explode runs once per battery.
+    * cached so the scan+tokenize+explode runs once per family.
     */
   private def rawShingles(spark: SparkSession, dir: String): DataFrame = {
     // NOT pinned wide (r18 reversal of the r17 computeWide pin): the r17
@@ -235,14 +200,10 @@ object DedupQueries {
     // waves whose scheduling overhead exceeds the compute. At cluster scale
     // the unpinned cache stays wide anyway (AQE coalescing targets bytes —
     // the guide §2.2 rule), and the compute-dense VERIFY stages keep their
-    // own keyed computeWide pins (d17/d19/d19b). Set
-    // `graft.pin.rawshingles=true` to re-measure the pinned form.
-    val base = tokensDf(spark, dir)
+    // own keyed computeWide pins (d17/d19/d19b).
+    Intermediates.cache(tokensDf(spark, dir)
       .select(col("doc_id"), explode(Text.shingles(col("tk"))).as("shingle"))
-      .select(col("doc_id"), Text.md5Long(col("shingle")).as("sh64"))
-    val pinned = if (spark.conf.getOption("graft.pin.rawshingles").exists(_.toBoolean))
-      computeWide(base, col("doc_id")) else base
-    tracked(pinned.cache())
+      .select(col("doc_id"), Text.md5Long(col("shingle")).as("sh64")))
   }
 
   private def shinglesDf(spark: SparkSession, dir: String): DataFrame = {
@@ -297,11 +258,11 @@ object DedupQueries {
     * worst key to cap² pairs.
     */
   def d2NgramJaccard(spark: SparkSession, dir: String): DataFrame = {
-    val sh = tracked(shinglesDf(spark, dir).cache())
+    val sh = Intermediates.cache(shinglesDf(spark, dir))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     // computeWide on the pair join's own hash(sh64) exchange: the
     // candidate blow-up + pair partial-agg is the dense work
-    val shJ = computeWideIf("graft.pin.d2")(sh, col("sh64"))
+    val shJ = computeWide(sh, col("sh64"))
     val inter = shJ.as("a").join(shJ.as("b"), Seq("sh64"))
       .where(col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
@@ -333,7 +294,7 @@ object DedupQueries {
     * hash family, so the oracle reproduces it exactly.
     */
   def d3MinhashLsh(spark: SparkSession, dir: String): DataFrame = {
-    val sh = tracked(shinglesDf(spark, dir).cache())
+    val sh = Intermediates.cache(shinglesDf(spark, dir))
     val hashed = sh
       .withColumn("h32", col("sh64").bitwiseAND(lit(0xFFFFFFFFL)))
       .select(
@@ -421,12 +382,10 @@ object DedupQueries {
     // persisted: d5/d7/d8/t5 all build on the signature; Spark's cache
     // manager matches the identical logical plan across those calls, so
     // the corpus is hashed once per (session, dir), not once per query.
-    // Registered in the shared-lifecycle queue → unpersistShared().
-    tracked(bitSums
+    Intermediates.cache(bitSums
       .select(col("doc_id") +: Seq(
         (0 until SimhashBits).map(b =>
-          when(col(s"s$b") > 0, lit(1L << b)).otherwise(lit(0L))).reduce(_ + _).as("simhash")): _*)
-      .persist())
+          when(col(s"s$b") > 0, lit(1L << b)).otherwise(lit(0L))).reduce(_ + _).as("simhash")): _*))
       .orderBy("doc_id")
   }
 
@@ -496,11 +455,10 @@ object DedupQueries {
       .distinct()
     // persisted for the same reason as the signature: the pair set is the
     // edge input of d7 (clustering), d8 (triangles), and t5 (edit check)
-    tracked(cand
+    Intermediates.cache(cand
       .withColumn("hamming", bit_count(col("sa").bitwiseXOR(col("sb"))).cast("int"))
       .where(col("hamming") <= 3)
-      .select("da", "db", "hamming")
-      .persist())
+      .select("da", "db", "hamming"))
       .orderBy("da", "db")
   }
 
@@ -760,8 +718,8 @@ object DedupQueries {
     */
   def d7DupClusters(spark: SparkSession, dir: String): DataFrame = {
     // the collapse is tiny by construction (≤ distinct signatures) and
-    // g feeds three branches — persist both, lifecycle-tracked
-    val g = tracked(simhashGroups(spark, dir).persist())
+    // g feeds three branches — cache it
+    val g = Intermediates.cache(simhashGroups(spark, dir))
     // MEASURED AND REJECTED (r18): eager checkpoints of labels/byValue —
     // the d20-style fix for their 2×/2× consumers — read 1.04× slower
     // interleaved: both relations are collapse-sized and re-derive cheaply
@@ -826,9 +784,7 @@ object DedupQueries {
     // scale prefer recompute (both passes are linear) or a reliable
     // checkpoint; the per-execution materialization models the curation
     // table this verdict feeds anyway.
-    val labeled0 = clusters.join(q, "doc_id")
-    val labeled = if (spark.conf.getOption("graft.d21.cklabeled").forall(_.toBoolean))
-      labeled0.localCheckpoint(true) else labeled0
+    val labeled = Intermediates.checkpoint(clusters.join(q, "doc_id"))
     val canon = labeled.groupBy("component")
       .agg(max(struct(col("q"), col("n_tokens"),
         (-col("doc_id")).as("neg"), col("doc_id").as("d"))).as("best"))
@@ -901,8 +857,8 @@ object DedupQueries {
     // the 100x probe saw one rep time out while its twin ran 34 s on
     // exactly that recomputation variance. Both frames are small by
     // construction (collapse ≤ distinct signatures).
-    val g = tracked(simhashGroups(spark, dir).persist())
-    val e = tracked(groupEdges(g).persist())
+    val g = Intermediates.cache(simhashGroups(spark, dir))
+    val e = Intermediates.cache(groupEdges(g))
     val gm = g.select(col("simhash"), col("m"))
     // The closed-form products run in DECIMAL(38,0): 64-bit m*(m-1)*(m-2)
     // overflows once a single fingerprint's multiplicity passes ~2.6M docs
@@ -964,14 +920,14 @@ object DedupQueries {
     // checkpoint each iteration's lazy plan re-runs the whole banded
     // candidate pipeline (iteration 3 pays it three times — measured
     // 3.3 s at sf0.1, dominated by that re-execution, not the joins)
-    val edgeDeg = edges.join(deg, "src").localCheckpoint(true)
+    val edgeDeg = Intermediates.checkpoint(edges.join(deg, "src"))
     var rank = deg.select(col("src").as("node"), lit(1000000L).as("r"))
     (1 to 3).foreach { _ =>
       rank = edgeDeg.join(rank, edgeDeg("src") === rank("node"))
         .selectExpr("dst", "r DIV deg AS c")
         .groupBy("dst").agg(sum("c").as("s"))
         .selectExpr("dst AS node", "CAST(150000 + (85 * s) DIV 100 AS BIGINT) AS r")
-        .localCheckpoint(true) // truncate per-round lineage (d7 discipline)
+        .transform(Intermediates.checkpoint) // truncate per-round lineage (d7 discipline)
     }
     rank.selectExpr("node AS doc_id", "r AS rank_micro")
       .orderBy(col("rank_micro").desc, col("doc_id"))
@@ -1087,7 +1043,7 @@ object DedupQueries {
         concat(col("text"), lit(" updated revision two")).as("text"))
     // the resident index side IS the raw shingle relation (same
     // tokenize+shingle+md5 derivation) — read it from the family's
-    // tracked cache instead of re-running the corpus scan per execution
+    // cache instead of re-running the corpus scan per execution
     // (persisted at scale either way)
     val corpusSh = rawShingles(spark, dir).withColumnRenamed("doc_id", "corp_id")
     val incSh = hashedShingles(incDocs, "in_id")
@@ -1269,7 +1225,7 @@ object DedupQueries {
     * tokenize+explode the bench battery used to pay across d10/d11.
     */
   private def baseSpanWindows(spark: SparkSession, dir: String): DataFrame =
-    tracked(spanWindows(Tables.documents(spark, dir).select("doc_id", "text")).cache())
+    Intermediates.cache(spanWindows(Tables.documents(spark, dir).select("doc_id", "text")))
 
   /** Merge repeated window positions into maximal spans (gaps-and-islands:
     * a position opens a new island iff it clears the running max span
@@ -1743,7 +1699,7 @@ object DedupQueries {
     // rows — keyed on a subset of the distinct's grouping columns, so the
     // pinned exchange IS the distinct's exchange (no extra shuffle) and
     // the verify aggregation's partial phase runs wide
-    val cand = computeWideIf("graft.pin.d17")(
+    val cand = computeWide(
       Seq("k1", "k2", "k3")
         .map(k => ka.join(kb, k).select("name_a", "nat_a", "ma", "name_b", "mb"))
         .reduce(_ unionAll _),
@@ -1863,13 +1819,13 @@ object DedupQueries {
     // computeWide: the packed-array agg's own exchange is hash(doc_id),
     // so the pin replaces it (collect_list has no partial reduction to
     // lose) and stops byte-coalescing from building every array serially
-    val arrs = computeWideIf("graft.pin.d19")(sh, col("doc_id")).groupBy("doc_id")
+    val arrs = computeWide(sh, col("doc_id")).groupBy("doc_id")
       .agg(sort_array(collect_list(col("sh64"))).as("arr"))
     // computeWide on each verify join's key: array_intersect per candidate
     // is the dense work; the pinned exchanges are the joins' own
-    computeWideIf("graft.pin.d19")(cand, col("da"))
+    computeWide(cand, col("da"))
       .join(arrs.select(col("doc_id").as("da"), col("arr").as("aa")), "da")
-      .transform(computeWideIf("graft.pin.d19")(_, col("db")))
+      .transform(computeWide(_, col("db")))
       .join(arrs.select(col("doc_id").as("db"), col("arr").as("ab")), "db")
       .withColumn("i", size(array_intersect(col("aa"), col("ab"))).cast("long"))
       .where(col("i") * 3 >= col("na") + col("nb"))
@@ -1964,7 +1920,7 @@ object DedupQueries {
     // computeWide keyed on the window/join distributions (see d17/d19):
     // the budget window and the array_intersect verify are compute-dense
     // over narrow rows, exactly what byte-based coalescing serializes
-    val budgeted = computeWideIf("graft.pin.d19b")(
+    val budgeted = computeWide(
         cand.withColumn("ub", expr("(least(na, nb) * 1000000) DIV greatest(na, nb)")),
         col("doc_id"))
       .withColumn("brk", row_number().over(wb))
@@ -1973,12 +1929,12 @@ object DedupQueries {
     // computeWide: the packed-array agg's own exchange is hash(doc_id),
     // so the pin replaces it (collect_list has no partial reduction to
     // lose) and stops byte-coalescing from building every array serially
-    val arrs = computeWideIf("graft.pin.d19b")(sh, col("doc_id")).groupBy("doc_id")
+    val arrs = computeWide(sh, col("doc_id")).groupBy("doc_id")
       .agg(sort_array(collect_list(col("sh64"))).as("arr"))
     val wk = Window.partitionBy("doc_id").orderBy(col("jaccard").desc, col("partner"))
     budgeted
       .join(arrs.select(col("doc_id"), col("arr").as("aa")), "doc_id")
-      .transform(computeWideIf("graft.pin.d19b")(_, col("partner")))
+      .transform(computeWide(_, col("partner")))
       .join(arrs.select(col("doc_id").as("partner"), col("arr").as("ab")), "partner")
       .withColumn("i", size(array_intersect(col("aa"), col("ab"))).cast("long"))
       .where(col("i") * 3 >= col("na") + col("nb"))
@@ -2076,7 +2032,7 @@ object DedupQueries {
       .select(col("da"), col("db"),
         (pmod(Text.md5Long(concat_ws(":", col("da"), col("db"))), lit(10)) === 0)
           .as("is_new"))
-      .localCheckpoint(true) // pairs feed 3 branches; don't re-run the LSH
+      .transform(Intermediates.checkpoint) // pairs feed 3 branches; don't re-run the LSH
     val resident = pairs.where(!col("is_new")).select("da", "db")
     val delta = pairs.where(col("is_new")).select("da", "db")
     // materialize the resident labels ONCE: incremental() consumes base in
@@ -2088,9 +2044,8 @@ object DedupQueries {
     // production scale the resident labels are a persisted table anyway
     // (see the scaladoc above), so the gate-side materialization mirrors
     // the real serving shape.
-    val base0 = graft.operators.ConnectedComponents.alternatingStars(resident)
-    val base = if (spark.conf.getOption("graft.d20.ckbase").forall(_.toBoolean))
-      base0.localCheckpoint(true) else base0
+    val base = Intermediates.checkpoint(
+      graft.operators.ConnectedComponents.alternatingStars(resident))
     // (measured, rejected: an eager checkpoint of lbl before the cluster-size
     // self-join read 1.05x — the duplicate tail is cheaper than its
     // materialization job at gate scale)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Intermediates
 import graft.functions.Vectors
 import graft.sources.Tables
 
@@ -232,12 +233,12 @@ object SimilarityQueries {
         Window.partitionBy("src").orderBy(col("cos").desc, col("nbr"))))
       .where(col("rn") <= GraphM)
       .select("src", "nbr")
-    // localCheckpoint: the graph build (bucketed self-join + top-M window)
+    // checkpoint: the graph build (bucketed self-join + top-M window)
     // is re-read by every beam hop — uncut, each hop's join re-executed
     // the whole construction (the d12 iterative-lineage lesson)
     val adj = directed
       .unionByName(directed.select(col("nbr").as("src"), col("src").as("nbr")))
-      .distinct().localCheckpoint(true)
+      .distinct().transform(Intermediates.checkpoint)
 
     val q = e.where(col("vec_id") < QueryBlock)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("n2").as("qn2"))
@@ -261,7 +262,7 @@ object SimilarityQueries {
       // cos is a pure function of (qid, node), so the distinct after the
       // union collapses re-visited nodes exactly; the checkpoint keeps
       // each hop's plan flat instead of re-executing all prior hops
-      visited = visited.unionByName(score(expanded)).distinct().localCheckpoint(true)
+      visited = Intermediates.checkpoint(visited.unionByName(score(expanded)).distinct())
     }
     visited.where(col("node") =!= col("qid"))
       .withColumn("rank", row_number().over(
@@ -281,19 +282,18 @@ object SimilarityQueries {
     */
   /** (vec_id, v, n2) widened embeddings — the scaffolding every s-family
     * query rebuilds (s1/s2/s3/s8, kmFit's quantized view, the streaming
-    * IVF serve twin). Persisted ONCE per corpus via the d-family's
-    * shared-lifecycle registry (`DedupQueries.tracked` →
-    * `unpersistShared()`): Spark's cache manager dedupes the
+    * IVF serve twin). Cached ONCE per corpus through
+    * [[graft.Intermediates.cache]] (released at the family boundary by
+    * `Intermediates.releaseAll()`): Spark's cache manager dedupes the
     * structurally-equal plan, so every caller reads the same
     * InMemoryRelation instead of re-scanning + re-widening per query —
     * the same fix that bought the d-family −31% in round 9.
     */
   private[graft] def ivfEmb(spark: SparkSession, dir: String): DataFrame =
-    DedupQueries.tracked(
+    Intermediates.cache(
       Tables.embeddings(spark, dir)
         .select(col("vec_id"), Vectors.toDouble(col("embedding")).as("v"))
-        .withColumn("n2", Vectors.norm2D(col("v")))
-        .persist())
+        .withColumn("n2", Vectors.norm2D(col("v"))))
 
   /** (cid, cv, cn2) deterministic IVF centroids (first [[Cells]] vectors). */
   private[graft] def ivfCents(spark: SparkSession, dir: String): DataFrame =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Intermediates
 import graft.sources.Tables
 
 /** Statistical profiling and slowly-changing-dimension construction.
@@ -103,15 +104,14 @@ object StatQueries {
     */
   /** Per-(priority, cents) value histogram — the shared input of x3 and
     * x18 (structurally identical in both, so Spark's cache manager serves
-    * both from ONE tracked cache entry across a battery run; x18 alone
+    * both from ONE cache entry within a battery family; x18 alone
     * reads it four times).
     */
   private def priceHistogram(spark: SparkSession, dir: String): DataFrame =
-    DedupQueries.tracked(Tables.orders(spark, dir)
+    Intermediates.cache(Tables.orders(spark, dir)
       .groupBy(col("o_orderpriority").as("g"),
         round(col("o_totalprice") * 100).cast("long").as("v"))
-      .agg(count(lit(1)).as("cnt"))
-      .cache())
+      .agg(count(lit(1)).as("cnt")))
 
   def x3Percentiles(spark: SparkSession, dir: String): DataFrame = {
     val perVc = priceHistogram(spark, dir)
@@ -866,14 +866,14 @@ object StatQueries {
     // at any corpus scale; the two-phase cumBelow shape is untouched.
     val gstats = sizes
       .join(medianOf(perVc, sizes).withColumnRenamed("v", "med"), "g")
-      .localCheckpoint(true)
+      .transform(Intermediates.checkpoint)
     val devPerV = perVc.join(broadcast(gstats.select("g", "med")), "g")
       .groupBy(col("g"), abs(col("v") - col("med")).as("v"))
       .agg(sum("cnt").as("cnt"))
     // the deviation histogram re-buckets the same rows, so its per-group
     // total is the same n — reuse it instead of re-aggregating sizes
     val mad = medianOf(devPerV, gstats.select("g", "n")).withColumnRenamed("v", "mad")
-    val all = gstats.select("g", "med").join(mad, "g").localCheckpoint(true)
+    val all = Intermediates.checkpoint(gstats.select("g", "med").join(mad, "g"))
     perVc.join(broadcast(all), "g")
       .groupBy("g")
       .agg(sum("cnt").as("n_rows"),

@@ -50,14 +50,24 @@ class BenchLineSpec extends AnyFunSuite {
   }
 
   test("compact values match the full line to 1 ms") {
-    val res = fakeResults.take(5)
-    val full = Bench.fullLine(res, Nil, "sf")
-    val compact = Bench.compactLine(res, Nil, "sf")
-    def vals(s: String): Seq[Double] =
-      """:(\d+\.\d+)[,}]""".r.findAllMatchIn(s.dropWhile(_ != '{').drop(1))
-        .map(_.group(1).toDouble).toSeq
-    vals(full).zip(vals(compact)).foreach { case (f, c) =>
-      assert(math.abs(f - c) <= 0.001, s"$f vs $c")
+    val res = fakeResults
+    // every numeric field by key: the total under "value", each query
+    // under its name (full line) or its compact key (compact line)
+    def byKey(line: String): Map[String, Double] =
+      """"([^"]+)":(\d+\.\d+)""".r.findAllMatchIn(line)
+        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    val full = byKey(Bench.fullLine(res, Nil, "sf"))
+    val compact = byKey(Bench.compactLine(res, Nil, "sf"))
+    val byShort = res.map(_._1).groupBy(_.takeWhile(_ != '_'))
+    def compactKey(k: String): String = {
+      val short = k.takeWhile(_ != '_')
+      if (byShort.get(short).exists(_.size == 1)) short else k
+    }
+    assert(full.size == res.size + 1 && compact.size == full.size,
+      s"${full.size} full vs ${compact.size} compact fields for ${res.size} queries")
+    full.foreach { case (k, f) =>
+      val c = compact.get(if (k == "value") k else compactKey(k))
+      assert(c.exists(v => math.abs(f - v) <= 0.001), s"$k: $f vs $c")
     }
   }
 }

@@ -1,24 +1,36 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.DedupQueries
+import graft.queries.{DedupQueries, SimilarityQueries, StatQueries}
 
-/** The d-family persists shared intermediates (shingle index, SimHash
-  * signature, near-dup pair set) so d2/d3 and d5/d7/d8/t5 hash the corpus
-  * once per (session, dir). That sharing needs an explicit lifecycle:
-  * Bench runs the full battery repeatedly in ONE session, so without a
-  * release hook the entries accumulate executor memory for the session's
-  * life. `unpersistShared()` must drop every registered entry, and the
-  * queries must transparently re-persist on next use.
+/** The engine materializes intermediates (shingle index, SimHash
+  * signature, near-dup pair set, label checkpoints) so a family's queries
+  * execute them once per (session, dir). That sharing needs an explicit
+  * lifecycle: Bench runs the full battery repeatedly in ONE session, so
+  * without a release hook the entries accumulate executor memory for the
+  * session's life. [[Intermediates.releaseAll]] (and its forwarder
+  * `DedupQueries.unpersistShared()`) must drop every registered cache AND
+  * checkpoint, and the queries must transparently re-materialize on next
+  * use.
   */
 class CacheLifecycleSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   private val sfDir = "/root/testdata/sf0.001"
 
+  /** Drop whatever earlier suites left behind, cached or checkpointed. */
+  private def isolate(): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+  }
+
   test("unpersistShared drops every d-family cache entry") {
-    spark.sharedState.cacheManager.clearCache() // isolate from earlier suites
+    isolate()
     DedupQueries.d3MinhashLsh(spark, sfDir).count()
     DedupQueries.d5SimhashPairs(spark, sfDir).count()
     assert(!spark.sharedState.cacheManager.isEmpty,
@@ -35,5 +47,40 @@ class CacheLifecycleSpec extends AnyFunSuite {
     assert(DedupQueries.d5SimhashPairs(spark, sfDir).count() == before)
     DedupQueries.unpersistShared()
     assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("releaseAll frees checkpoints too: no persistent RDD survives d20, d21, x18 and s7") {
+    isolate()
+    val counts = Seq(
+      DedupQueries.d20IncrementalCc _, DedupQueries.d21QualityCanonical _,
+      StatQueries.x18MadOutliers _, SimilarityQueries.s7IncrementalIvf _)
+      .map(q => q(spark, sfDir).count())
+    assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
+      "expected cached or checkpointed intermediates after the four queries")
+    Intermediates.releaseAll()
+    assert(spark.sharedState.cacheManager.isEmpty)
+    val left = spark.sparkContext.getPersistentRDDs
+    assert(left.isEmpty, s"persistent RDDs leaked after releaseAll(): ${left.values.mkString(", ")}")
+    // a rebuilt query re-materializes what was released
+    assert(DedupQueries.d21QualityCanonical(spark, sfDir).count() == counts(1))
+    Intermediates.releaseAll()
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("no bare materialization outside the owner: src/main has no cache/persist/localCheckpoint calls") {
+    val allowed = Set("Intermediates.scala", "Expectations.scala")
+    val bare = """localCheckpoint\(|\.cache\(\)|\.persist\(""".r
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val hits = try walk.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && !allowed(p.getFileName.toString))
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if bare.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    finally walk.close()
+    assert(hits.isEmpty,
+      "materialize through graft.Intermediates (cache/checkpoint), not directly:\n" +
+        hits.mkString("\n"))
   }
 }

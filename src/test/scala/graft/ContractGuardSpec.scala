@@ -47,7 +47,7 @@ class ContractGuardSpec extends AnyFunSuite {
     }
     assert(boom.getMessage.contains("pair-output budget"), boom.getMessage)
     assert(boom.getMessage.contains("d5b_top_pairs"), boom.getMessage)
-    DedupQueries.unpersistShared()
+    Intermediates.releaseAll()
   }
 
   test("d6 pair ceiling: an m7-class collapsed embedding corpus is refused on the candidate budget") {
@@ -101,14 +101,14 @@ class ContractGuardSpec extends AnyFunSuite {
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     write(50)
     DedupQueries.d5SimhashPairs(spark, dir) // memoizes a PASS
-    DedupQueries.unpersistShared()
+    Intermediates.releaseAll()
     Thread.sleep(1100) // mtime granularity: ensure the rewrite changes the fingerprint
     write(70000)
     val boom = intercept[IllegalStateException] {
       DedupQueries.d5SimhashPairs(spark, dir)
     }
     assert(boom.getMessage.contains("pair-output budget"), boom.getMessage)
-    DedupQueries.unpersistShared()
+    Intermediates.releaseAll()
   }
 
   test("guards stay silent at the gate SF: d5 and d6 still construct over the real corpus") {
@@ -116,7 +116,7 @@ class ContractGuardSpec extends AnyFunSuite {
     // construction runs the pre-flight; materialization proves no refusal
     assert(DedupQueries.d5SimhashPairs(spark, dir).count() >= 0)
     assert(DedupQueries.d6EmbeddingNearDup(spark, dir).count() >= 0)
-    DedupQueries.unpersistShared()
+    Intermediates.releaseAll()
   }
 
   test("probe construction classification: refusal by type, foreign failure becomes a cell, success passes") {

@@ -78,6 +78,18 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(got.exceptAll(reloaded).isEmpty && reloaded.exceptAll(got).isEmpty)
   }
 
+  test("a failed build propagates its write error and leaves no checkpoint resident") {
+    // the base path is an existing regular file: the corpus-sized
+    // assignments write fails, and so does the overlapped centroid write
+    val blocked = Files.createTempFile("graft-ivf-blocked", "").toString
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception] {
+      IvfIndex.build(spark, Tables.embeddings(spark, dir), blocked, cells = 16, lloydIters = 2)
+    }
+    val gained = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(gained.isEmpty, s"failed build left persistent RDDs ${gained.mkString(", ")}")
+  }
+
   test("append: increment joins the lists without touching resident files; ≡ frozen-centroid rebuild") {
     val e = Tables.embeddings(spark, dir)
     val isInc = col("vec_id") % 5 === 0 // 20% arrives as the crawl increment
