@@ -6,8 +6,8 @@ package graft
   * operator's measured-regime budget: the message carries the routing
   * answer (which scale-path operator to use instead).
   *
-  * A dedicated type — not a message-substring convention — so probe
-  * harnesses ([[ScaleProbe]] `--cohort`) can classify a refusal by
+  * A dedicated type — not a message-substring convention — so the probe
+  * battery ([[ScaleProbe]], both corpus shapes) can classify a refusal by
   * `catch`, and any OTHER construction-time failure is recorded as that
   * query's own `failed_at_construction` cell instead of aborting the run
   * (r16 advice: the old `getMessage.contains("refused")` match let a

@@ -432,16 +432,7 @@ object Bpe {
   /** The distributed merge loop over any (w, cnt) type relation —
     * package-private so specs can drive it on synthetic histograms.
     */
-  private[graft] def distMerges(types: DataFrame, rounds: Int): Seq[(String, String, Long)] =
-    distMergesTimed(types, rounds)._1
-
-  /** [[distMerges]] plus per-round wall seconds — the probe surface for
-    * certifying that the every-[[DistCheckpointEvery]] lineage truncation
-    * actually FLATTENS round latency at depth (without it, each round
-    * re-analyzes a plan tree one `replace` deeper, and past ~100 rounds
-    * the tree — not the data — dominates).
-    */
-  private[graft] def distMergesTimed(types: DataFrame, rounds: Int): (Seq[(String, String, Long)], Seq[Double]) = {
+  private[graft] def distMerges(types: DataFrame, rounds: Int): Seq[(String, String, Long)] = {
     import scala.collection.mutable
     val S = "\u0001"; val E = "\u0002"
     // round-0 symbolization: one sentinel-wrapped code point per symbol.
@@ -458,12 +449,10 @@ object Bpe {
       .transform(Intermediates.checkpoint)
     var pinned = cur // the checkpoint whose blocks we currently own
     val merges = mutable.ArrayBuffer.empty[(String, String, Long)]
-    val roundSecs = mutable.ArrayBuffer.empty[Double]
     try {
       var r = 0
       var drained = false
       while (r < rounds && !drained) {
-        val t0 = System.nanoTime()
         val l = filter(split(translate(col("sym"), S, ""), E), x => x =!= lit(""))
         val win = cur
           .select(col("cnt"), l.as("l"))
@@ -488,11 +477,10 @@ object Bpe {
             Intermediates.release(pinned)
             pinned = ck; cur = ck
           }
-          roundSecs += (System.nanoTime() - t0) / 1e9
         }
       }
     } finally Intermediates.release(pinned)
-    (merges.toSeq, roundSecs.toSeq)
+    merges.toSeq
   }
 
   /** Byte-level oracle CTEs: pretokenize with the SAME regex, hex-pair

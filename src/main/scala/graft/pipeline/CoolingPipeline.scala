@@ -117,7 +117,7 @@ final class CoolingPipeline(
     // K3 destructive drop, then C4 watermark advance — in that order.
     val parts = source.listPartitions(spark, s"payments_y$year")
     source.dropPartitions(spark, parts)
-    watermark.advance()
+    watermark.advance(start)
 
     val exported = cold.scan(spark).where(col("payment_year") === year).count()
     (year, exported, diff)

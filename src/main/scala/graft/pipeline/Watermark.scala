@@ -1,7 +1,8 @@
 package graft.pipeline
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import java.time.LocalDate
 
 /** The pipeline's only mutable state: the `EXP_DATE` watermark the reference
@@ -9,7 +10,9 @@ import java.time.LocalDate
   * 31-33; SURVEY.md §1.5, C4). One run processes `[value, value + 1 year)`
   * and advances the value only after the verified, destructive steps —
   * that ordering is the exactly-once story, so [[advance]] writes
-  * atomically (temp file + atomic move).
+  * atomically (temp file + atomic move) and only from the value the run
+  * started at: two overlapping drivers would otherwise each advance once
+  * (2020 → 2021 → 2022) and strand 2021's hot partitions.
   */
 final class Watermark(path: String) {
 
@@ -30,10 +33,26 @@ final class Watermark(path: String) {
 
   def windowEnd: LocalDate = value.plusYears(1)
 
-  def advance(): LocalDate = {
-    val next = windowEnd
-    write(next)
-    next
+  /** Compare-and-set: moves `expected` to `expected + 1 year`, re-reading
+    * the value under an exclusive lock on the sidecar `.lock` file (the
+    * JVM monitor covers drivers on threads of one process, where file
+    * locks are not re-entrant). Throws without writing when another
+    * driver has already moved the value.
+    */
+  def advance(expected: LocalDate): LocalDate = Watermark.synchronized {
+    val lockFile = FileChannel.open(Paths.get(path + ".lock"),
+      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+    try {
+      lockFile.lock() // released by close
+      val cur = value
+      if (cur != expected)
+        throw new IllegalStateException(
+          s"watermark $path is at $cur, not the $expected this run started from: " +
+            "another driver advanced it; this run's advance is refused")
+      val next = expected.plusYears(1)
+      write(next)
+      next
+    } finally lockFile.close()
   }
 
   private def write(d: LocalDate): Unit = {
@@ -42,3 +61,6 @@ final class Watermark(path: String) {
     Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 }
+
+/** Process-wide monitor for [[Watermark.advance]]. */
+object Watermark

@@ -120,7 +120,7 @@ class ContractGuardSpec extends AnyFunSuite {
   }
 
   test("probe construction classification: refusal by type, foreign failure becomes a cell, success passes") {
-    // the cohort probe classifies refusals by ContractRefusedException TYPE
+    // the probe battery classifies refusals by ContractRefusedException TYPE
     // — a guard message without the word 'refused' still classifies, and
     // an unrelated construction failure records its own cell instead of
     // aborting the probe run (r16 advice)

@@ -3,12 +3,12 @@ package graft
 import java.nio.file.Files
 import java.time.LocalDate
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.{CoolingPipeline, PaymentsGenerator, Watermark}
-import graft.sources.{ColdStore, FsUtil, ParquetPaymentsSource}
+import graft.sources.{ColdStore, FsUtil, ParquetPaymentsSource, PaymentsSource}
 
 /** End-to-end test of the cooling pipeline at mini scale (SURVEY.md §5.2):
   * 13 generated months (2020 full leap year + 2021-01), cooled year by
@@ -100,5 +100,43 @@ class PipelineSpec extends AnyFunSuite {
       cold.where(col("payment_date") =!= date_trunc("second", col("payment_date"))).count()
     assert(withSubSecond == 0L)
     assert(p.cold.schema("id").nullable == false)
+  }
+
+  test("two drivers, one watermark: the later advance is refused, 2021's hot partitions survive") {
+    // the other driver cools the same 2020 window and advances while this
+    // run sits between its drop and its advance
+    val dir = Files.createTempDirectory("graft-pipeline-race").toString
+    PaymentsGenerator.writeHotStore(spark, s"$dir/hot", "2020-12-01", months = 2)
+    val wmFile = s"$dir/watermark.json"
+    val start = LocalDate.parse("2020-01-01")
+    new Watermark(wmFile).initIfAbsent(start)
+    val hot = new ParquetPaymentsSource(s"$dir/hot")
+    val racing = new PaymentsSource {
+      def scan(spark: SparkSession): DataFrame = hot.scan(spark)
+      def listPartitions(spark: SparkSession, prefix: String): Seq[String] =
+        hot.listPartitions(spark, prefix)
+      def dropPartitions(spark: SparkSession, names: Seq[String]): Unit = {
+        hot.dropPartitions(spark, names)
+        new Watermark(wmFile).advance(start)
+        ()
+      }
+    }
+    val p = new CoolingPipeline(racing, new ColdStore(s"$dir/cold"), new Watermark(wmFile))
+    val refused = intercept[IllegalStateException](p.runOnce(spark))
+    assert(refused.getMessage.contains("another driver"), refused.getMessage)
+    assert(new Watermark(wmFile).value == LocalDate.parse("2021-01-01"))
+    assert(hot.listPartitions(spark, "payments_y2021") == Seq("payments_y2021m01"))
+    assert(hot.scan(spark).where(year(col("payment_date")) === 2021).count() == 44640L)
+  }
+
+  test("a stale advance leaves the watermark file unchanged") {
+    val path = Files.createTempDirectory("graft-watermark").resolve("watermark.json")
+    val wm = new Watermark(path.toString)
+    wm.initIfAbsent(LocalDate.parse("2021-01-01"))
+    val before = Files.readAllBytes(path).toSeq
+    intercept[IllegalStateException](wm.advance(LocalDate.parse("2020-01-01")))
+    assert(Files.readAllBytes(path).toSeq == before)
+    assert(wm.advance(LocalDate.parse("2021-01-01")) == LocalDate.parse("2022-01-01"))
+    assert(wm.value == LocalDate.parse("2022-01-01"))
   }
 }

@@ -88,6 +88,25 @@ class ScaleProbeSpec extends AnyFunSuite {
     assert(Files.getLastModifiedTime(marker) == before)
   }
 
+  test("cohort shape: base x factor documents, 80% on at most 150 texts, every table resolves") {
+    val dir = Files.createTempDirectory("graft-probe").toString + "/cohort-x2"
+    ScaleProbe.synthesize(spark, base, dir, 2, cohort = true)
+    val d = Tables.documents(spark, dir)
+    val n = d.count()
+    assert(n == Tables.documents(spark, base).count() * 2)
+    assert(d.select("doc_id").distinct().count() == n)
+    // the ScaleProbe.CohortKeys most frequent texts carry the collapsed share
+    val top = d.groupBy("text").agg(count(lit(1)).as("n")).orderBy(col("n").desc)
+      .limit(ScaleProbe.CohortKeys).agg(sum("n")).head.getLong(0)
+    assert(top >= n * ScaleProbe.CohortSharePct / 100, s"$top of $n documents on the top texts")
+    assert(d.where(col("n_chars") =!= length(col("text"))).count() == 0)
+    Tables.names.foreach(t => assert(Tables.load(spark, dir, t).count() > 0, t))
+    val marker = Paths.get(dir, "_PROBE_OK")
+    val before = Files.getLastModifiedTime(marker)
+    ScaleProbe.synthesize(spark, base, dir, 2, cohort = true)
+    assert(Files.getLastModifiedTime(marker) == before)
+  }
+
   test("probe budget multipliers name real queries (a rename can't silently drop the d14 budget)") {
     // SCALE.md-documented slow-by-envelope operators get a budget
     // multiplier so family rotations stop re-paying false timeouts plus
