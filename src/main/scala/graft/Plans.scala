@@ -59,13 +59,12 @@ object Plans {
       "and the two-anti-join exclusion composition.\n"
     headline.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      sb ++= s"\n## $name\n\n```\n${collapseRepeats(plan)}```\n"
+      sb ++= s"\n## $name\n\n```\n${collapseRepeats(formatted(df))}```\n"
     }
     sb ++= bucketedReconcileSection(spark)
+    sb ++= shuffleReconcileSection(spark)
     Files.write(Paths.get("PLANS.md"), sb.toString.getBytes(StandardCharsets.UTF_8))
-    println(s"wrote PLANS.md (${headline.size + 1} plans)")
+    println(s"wrote PLANS.md (${headline.size + 2} plans)")
     spark.stop()
   }
 
@@ -131,9 +130,30 @@ object Plans {
       val frame = ExclusionJoin.countFrame(
         spark.table("plans_hot_b"), spark.table("plans_cold_b"), keys)
       frame.head() // finalize the adaptive plan
-      val plan = frame.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      s"\n## q2_reconcile_bucketed (co-bucketed stores — zero data Exchange)\n\n```\n$plan```\n"
+      s"\n## q2_reconcile_bucketed (co-bucketed stores — zero data Exchange)\n\n```\n${formatted(frame)}```\n"
     } finally spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", saved)
   }
+
+  /** The Q2 reconcile over plain parquet stores (ExclusionJoin.count, the
+    * gate for the parquet/JDBC hot store): one aggregation over the signed
+    * union of both key projections — one data Exchange, no sort, no join
+    * (`PipelineSpec` pins this).
+    */
+  private def shuffleReconcileSection(spark: SparkSession): String = {
+    import graft.operators.ExclusionJoin
+    import graft.pipeline.{CoolingPipeline, PaymentsGenerator}
+    val keys = CoolingPipeline.reconcileKeys
+    val dir = Files.createTempDirectory("graft-plans-q2").toString
+    val payments = PaymentsGenerator.payments(spark, "2020-01-01", months = 3)
+      .select(keys.map(org.apache.spark.sql.functions.col): _*)
+    Seq("hot", "cold").foreach(side => payments.write.parquet(s"$dir/$side"))
+    val frame = ExclusionJoin.diffCountFrame(
+      spark.read.parquet(s"$dir/hot"), spark.read.parquet(s"$dir/cold"), keys)
+    frame.collect() // runs this frame's own plan, so the adaptive plan prints final
+    s"\n## q2_reconcile_shuffle (parquet stores — one Exchange, no join)\n\n```\n${formatted(frame)}```\n"
+  }
+
+  private def formatted(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
 }

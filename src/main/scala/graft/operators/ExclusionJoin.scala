@@ -9,15 +9,18 @@ import org.apache.spark.sql.functions._
   * copy-reconciliation test whose cardinality must be 0 before the
   * destructive partition drop (/root/reference/src/py/yq_dag.py:93-94).
   *
-  * Spark has no single join type for this; we compose it two ways:
+  * Spark has no single join type for this; we compose it three ways:
   *
   *  - [[apply]]: `(L anti R) UNION ALL (R anti L)` — preserves each side's
   *    full rows. Both anti joins shuffle on the same key, so at scale the two
   *    passes hash-partition identically (sort-merge anti, no broadcast — both
   *    sides are large in the reconciliation use).
-  *  - [[count]]: single FULL OUTER self-reconciliation on the key projection
-  *    with presence markers — ONE join (one shuffle per side instead of two)
-  *    for the count-only gate, the hot path of the pipeline.
+  *  - [[diffFrame]] / [[count]]: no join at all. The key projections are
+  *    unioned with a sign (+1 left, −1 right) and aggregated once per key
+  *    tuple; a tuple's signed sum is its multiplicity drift. One Exchange,
+  *    no sort — the count-only gate, the hot path of the pipeline.
+  *  - [[countFrame]]: per-side aggregates + one FULL OUTER join — the
+  *    form [[countBucketed]] plans straight off co-bucketed scans.
   *
   * NULL keys never match (standard equi-join semantics), mirroring YQL; the
   * reference deliberately keys on NOT NULL columns only. The key includes a
@@ -42,19 +45,42 @@ object ExclusionJoin {
       .unionByName(right.join(left, keys, "left_anti").withColumn(tagCol, lit(rightTag)),
         allowMissingColumns = true)
 
-  /** Count-only reconciliation (`select count(1) from L exclusion join R`):
-    * one aggregated full-outer join over de-duplicated key projections.
+  /** Per key tuple that does not reconcile: the key columns, `diff` (left
+    * rows minus right rows — `+` only on the left, `−` only on the right)
+    * and `mismatched`, the rows the tuple leaves unmatched: `|diff|`, or
+    * every row of the tuple when a key is NULL (NULL keys never match).
+    * One aggregation over a signed union: one Exchange, no join.
     *
-    * Note: the reference's semantics are bag semantics over key tuples; the
-    * pipeline's keys are unique per row (id is a PK member), so we reconcile
-    * multiplicities too via per-side pre-aggregated counts — catches
-    * duplicate-row corruption, not just missing rows.
+    * Bag semantics over key tuples, like the reference's count: a
+    * duplicated row is a drift of 1 even though the anti-join row form
+    * ([[apply]]) cannot see it.
+    */
+  def diffFrame(left: DataFrame, right: DataFrame, keys: Seq[String]): DataFrame = {
+    // aliased so JDBC sources with dialect-uppercased names union by name
+    def signed(df: DataFrame, sign: Long): DataFrame =
+      df.select(keys.map(k => col(k).as(k)) :+ lit(sign).as("_sign"): _*)
+    val anyNull = keys.map(col(_).isNull).reduce(_ || _)
+    signed(left, 1L).unionByName(signed(right, -1L))
+      .groupBy(keys.map(col): _*)
+      .agg(sum("_sign").as("diff"), sum(lit(1L)).as("_rows"))
+      .withColumn("mismatched", when(anyNull, col("_rows")).otherwise(abs(col("diff"))))
+      .where(col("mismatched") > 0)
+      .drop("_rows")
+  }
+
+  /** Count-only reconciliation (`select count(1) from L exclusion join R`)
+    * — the Q2 gate over the shuffle path.
     */
   def count(left: DataFrame, right: DataFrame, keys: Seq[String]): Long =
-    countFrame(left, right, keys).head.getLong(0)
+    diffCountFrame(left, right, keys).head.getLong(0)
 
-  /** The count-reconciliation as a 1-row frame (so callers can inspect the
-    * physical plan or embed it in a larger query).
+  /** [[count]] as a 1-row frame, for plan inspection. */
+  private[graft] def diffCountFrame(left: DataFrame, right: DataFrame, keys: Seq[String]): DataFrame =
+    diffFrame(left, right, keys).agg(coalesce(sum("mismatched"), lit(0L)).as("n_mismatch"))
+
+  /** The join form of the count: per-side aggregates, one full-outer join
+    * on the keys. Equal to [[count]] on every input; the co-bucketed gate
+    * ([[countBucketed]]) runs it.
     */
   def countFrame(left: DataFrame, right: DataFrame, keys: Seq[String]): DataFrame = {
     val kc = keys.map(col)

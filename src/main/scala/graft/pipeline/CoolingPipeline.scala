@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Yql
@@ -76,12 +76,27 @@ final class CoolingPipeline(
       case Some((hotTable, coldTable)) =>
         ExclusionJoin.countBucketed(spark, hotTable, coldTable, reconcileKeys)
       case None =>
-        val hot = windowFilter(source.scan(spark), start, end)
-          .select(reconcileKeys.map(col): _*)
-        val coldSide = windowFilter(cold.scan(spark), start, end)
-          .select(reconcileKeys.map(col): _*)
+        val (hot, coldSide) = keySides(spark, start, end)
         ExclusionJoin.count(hot, coldSide, reconcileKeys)
     }
+
+  /** The window's reconcile-key projections of the hot and the cold store. */
+  private[graft] def keySides(spark: SparkSession, start: LocalDate, end: LocalDate): (DataFrame, DataFrame) = {
+    def keys(df: DataFrame) = windowFilter(df, start, end).select(reconcileKeys.map(col): _*)
+    (keys(source.scan(spark)), keys(cold.scan(spark)))
+  }
+
+  /** Up to `n` key tuples that fail the window's reconcile, rendered as
+    * `id <id> <signed multiplicity>` (`+` only in the hot store, `-` only
+    * in the cold store). Runs only after the gate has failed.
+    */
+  private def offenders(spark: SparkSession, start: LocalDate, end: LocalDate, n: Int): Seq[String] = {
+    val (hot, coldSide) = keySides(spark, start, end)
+    ExclusionJoin.diffFrame(hot, coldSide, reconcileKeys).limit(n).collect().toSeq.map { r =>
+      val d = r.getAs[Long]("diff")
+      s"id ${r.getAs[Any]("id")} ${if (d > 0) "+" else ""}$d"
+    }
+  }
 
   /** The co-bucketed table pair for this window, when the layout supports
     * the exchange-free gate: both stores year-bucketed with the SAME
@@ -99,28 +114,34 @@ final class CoolingPipeline(
     case _ => None
   }
 
-  /** One DAG run. Returns (year, rowsExported, diffCount). */
+  /** One DAG run. Returns (year, rowsExported, diffCount), where
+    * rowsExported is the number of rows the export wrote, observed in-band
+    * on the export itself. For a whole-year window that is the cooled
+    * year's row count; for a mid-year start it counts the window.
+    */
   def runOnce(spark: SparkSession): (Int, Long, Long) = {
     val start = watermark.value
     val end = watermark.windowEnd
     val year = start.getYear
 
     // Q1 export — dynamic partition overwrite subsumes the delete step.
-    cold.exportYear(exportFrame(spark, start, end))
+    val exported = Observation()
+    cold.exportYear(exportFrame(spark, start, end).observe(exported, count(lit(1)).as("rows")))
 
     // Q2 reconcile, C2 branch, C3 fail.
     val diff = reconcile(spark, start, end)
     if (diff != 0L)
       throw new IllegalStateException(
-        s"Data are not equal! exclusion-join count for $year = $diff; source partitions retained")
+        s"Data are not equal! exclusion-join count for $year = $diff; source partitions retained; " +
+          "offending keys (up to 10; + only in the hot store, - only in the cold store): " +
+          offenders(spark, start, end, 10).mkString(", "))
 
     // K3 destructive drop, then C4 watermark advance — in that order.
     val parts = source.listPartitions(spark, s"payments_y$year")
     source.dropPartitions(spark, parts)
     watermark.advance(start)
 
-    val exported = cold.scan(spark).where(col("payment_year") === year).count()
-    (year, exported, diff)
+    (year, exported.get("rows").asInstanceOf[Long], diff)
   }
 
   /** C5: drive runs until the hot store is exhausted — the driver-loop

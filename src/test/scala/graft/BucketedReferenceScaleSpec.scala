@@ -75,7 +75,7 @@ class BucketedReferenceScaleSpec extends AnyFunSuite {
       gate.table(hotT), gate.table(coldT), p.reconcileKeys)
       .queryExecution.executedPlan.toString
     assert(!bucketedPlan.contains("Exchange hashpartitioning"))
-    val shufflePlan = ExclusionJoin.countFrame(
+    val shufflePlan = ExclusionJoin.diffCountFrame(
       plain.table(hotT), plain.table(coldT), p.reconcileKeys)
       .queryExecution.executedPlan.toString
     assert(shufflePlan.contains("Exchange hashpartitioning"))

@@ -56,6 +56,15 @@ class CoreSpec extends AnyFunSuite {
     assert(ExclusionJoin.count(l, mut, Seq("id", "amount")) == 2L)
   }
 
+  test("exclusion join count: NULL-key tuples never reconcile, in both count forms") {
+    val l = Seq((1L, "a"), (2L, "b"), (4L, null), (4L, null)).toDF("k", "v")
+    val r = Seq((1L, "a"), (3L, "c"), (4L, null), (5L, null)).toDF("k", "v")
+    // (2,b) and (3,c) unmatched, plus all four NULL-key rows
+    assert(ExclusionJoin.count(l, r, Seq("k", "v")) == 6L)
+    assert(ExclusionJoin.countFrame(l, r, Seq("k", "v")).head.getLong(0) == 6L)
+    assert(ExclusionJoin(l, r, Seq("k", "v")).count() == 6L)
+  }
+
   test("exclusion join count: empty inputs reconcile to 0") {
     val l = Seq((1L, "x")).toDF("id", "v")
     assert(ExclusionJoin.count(l.filter(lit(false)), l.filter(lit(false)), Seq("id", "v")) == 0L)

@@ -4,9 +4,14 @@ import java.nio.file.Files
 import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.ExclusionJoin
 import graft.pipeline.{CoolingPipeline, PaymentsGenerator, Watermark}
 import graft.sources.{ColdStore, FsUtil, ParquetPaymentsSource, PaymentsSource}
 
@@ -65,20 +70,44 @@ class PipelineSpec extends AnyFunSuite {
     val s = LocalDate.parse("2021-01-01"); val e = LocalDate.parse("2022-01-01")
     val good = p.exportFrame(spark, s, e)
 
-    def reconcileWith(coldDf: DataFrame): Long = {
-      p.cold.exportYear(coldDf)
+    // each corrupted copy goes through a whole run: the gate refuses it,
+    // names the victim id, and nothing destructive happens
+    def reconcileWith(corrupt: DataFrame => DataFrame, victims: String*): Long = {
+      val corrupting = new ColdStore(coldBase) {
+        override def exportYear(df: DataFrame): Unit = super.exportYear(corrupt(df))
+      }
+      val refused = intercept[IllegalStateException](
+        new CoolingPipeline(p.source, corrupting, p.watermark).runOnce(spark))
+      assert(refused.getMessage.contains("Data are not equal!"), refused.getMessage)
+      victims.foreach(v => assert(refused.getMessage.contains(v), refused.getMessage))
+      assert(p.watermark.value == s)
+      assert(p.source.listPartitions(spark, "payments_y2021") == Seq("payments_y2021m01"))
       p.reconcile(spark, s, e)
     }
     // drop one row
-    assert(reconcileWith(good.where(col("id") =!= 527041L)) == 1L)
+    assert(reconcileWith(_.where(col("id") =!= 527041L), "id 527041 +1") == 1L)
     // duplicate one row
-    assert(reconcileWith(good.unionAll(good.where(col("id") === 527041L))) == 1L)
+    assert(reconcileWith(df => df.unionAll(df.where(col("id") === 527041L)), "id 527041 -1") == 1L)
     // flip one amount's low bits — DOUBLE is part of the join key
-    val flipped = good.withColumn("amount",
+    val flip = (df: DataFrame) => df.withColumn("amount",
       when(col("id") === 527042L, col("amount") + lit(1e-9)).otherwise(col("amount")))
-    assert(reconcileWith(flipped) == 2L) // unmatched on both sides
+    assert(reconcileWith(flip, "id 527042 +1", "id 527042 -1") == 2L) // unmatched on both sides
     // restore the faithful copy for subsequent tests
-    assert(reconcileWith(good) == 0L)
+    p.cold.exportYear(good)
+    assert(p.reconcile(spark, s, e) == 0L)
+  }
+
+  test("the shuffle gate's plan: one Exchange hashpartitioning, no sort-merge join") {
+    val p = fixture
+    val (hot, coldSide) = p.keySides(spark, LocalDate.parse("2021-01-01"), LocalDate.parse("2022-01-01"))
+    val gate = ExclusionJoin.diffCountFrame(hot, coldSide, p.reconcileKeys)
+    assert(gate.collect().head.getLong(0) == 0L) // collect() finalizes gate's own adaptive plan
+    val nodes = new AdaptiveSparkPlanHelper {}.collect(gate.queryExecution.executedPlan) { case n => n }
+    val hashExchanges = nodes.collect {
+      case x: ShuffleExchangeExec if x.outputPartitioning.isInstanceOf[HashPartitioning] => x
+    }
+    assert(hashExchanges.size == 1, gate.queryExecution.executedPlan.toString)
+    assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]), gate.queryExecution.executedPlan.toString)
   }
 
   test("run 2 cools the partial month; federation analytics reproduces the golden distribution") {

@@ -123,6 +123,15 @@ object ExclusionJoinProps extends Properties("graft") {
       }
     }
 
+  property("count (signed union) == join-form countFrame, NULL keys and duplicates included") =
+    forAll(relGen, relGen) { (l, r) =>
+      val spark = sc_
+      import spark.implicits._
+      val ldf = l.toDF("k", "v"); val rdf = r.toDF("k", "v")
+      ExclusionJoin.count(ldf, rdf, Seq("k", "v")) ==
+        ExclusionJoin.countFrame(ldf, rdf, Seq("k", "v")).head.getLong(0)
+    }
+
   private val asofEventGen: Gen[(Long, Long, Double)] = for {
     key <- Gen.choose(0L, 2L)
     ts <- Gen.choose(0L, 50L)
