@@ -5,16 +5,6 @@ import java.time.LocalDate
 import graft.pipeline.{CoolingPipeline, Watermark}
 import graft.sources.{ColdStore, ParquetPaymentsSource}
 
-/** CLI for the cooling pipeline — the operational surface of the
-  * reference's DAG (`airflow trigger YQ_DEMO` → `java … graft.Cool`).
-  *
-  * Usage: `graft.Cool <hotDir> <coldDir> <watermarkFile> [initDate] [maxRuns]`
-  *
-  * Each run moves one year-window hot→cold, reconciles, drops the source
-  * partitions, and advances the watermark; `maxRuns` > 1 replays the
-  * hourly cadence until the hot store is drained (the reference's
-  * `@hourly` single-flight loop, compressed).
-  */
 /** Companion generator CLI: seed a hot store for [[Cool]] runs.
   * Usage: `graft.Gen <hotDir> [startDate] [months]` — mirrors the
   * reference's db_init.sql data generator (1 row/minute, seeded).
@@ -30,6 +20,16 @@ object Gen {
   }
 }
 
+/** CLI for the cooling pipeline — the operational surface of the
+  * reference's DAG (`airflow trigger YQ_DEMO` → `java … graft.Cool`).
+  *
+  * Usage: `graft.Cool <hotDir> <coldDir> <watermarkFile> [initDate] [maxRuns]`
+  *
+  * Each run moves one year-window hot→cold, reconciles, advances the
+  * watermark, and drops the source partitions; `maxRuns` > 1 replays the
+  * hourly cadence until the hot store is drained (the reference's
+  * `@hourly` single-flight loop, compressed).
+  */
 object Cool {
   def main(args: Array[String]): Unit = {
     if (args.length < 3) {

@@ -61,8 +61,7 @@ object Plans {
       val df = SparkEntry.queries(name)(spark, sfDir)
       sb ++= s"\n## $name\n\n```\n${collapseRepeats(formatted(df))}```\n"
     }
-    sb ++= bucketedReconcileSection(spark)
-    sb ++= shuffleReconcileSection(spark)
+    sb ++= reconcileSections(spark)
     Files.write(Paths.get("PLANS.md"), sb.toString.getBytes(StandardCharsets.UTF_8))
     println(s"wrote PLANS.md (${headline.size + 2} plans)")
     spark.stop()
@@ -111,46 +110,31 @@ object Plans {
     out.toString
   }
 
-  /** The co-bucketed Q2 reconcile (ExclusionJoin.countBucketed): both
-    * stores bucketed on the PK, so the full-outer join and both per-side
-    * aggregations run straight off the bucketed scans — the only Exchange
-    * left is the 1-row count rollup (`BucketedReconcileSpec` asserts this).
+  /** The Q2 gate's frame (ExclusionJoin.count) over two copies of 3 months
+    * of payment keys, one section per store layout. Co-bucketed on the PK,
+    * the signed union keeps the scans' bucketing, so the only Exchange
+    * left is the 1-row count rollup (`BucketedReconcileSpec` asserts
+    * this); over plain parquet there is one data Exchange, no sort and no
+    * join (`PipelineSpec` pins this).
     */
-  private def bucketedReconcileSection(spark: SparkSession): String = {
+  private def reconcileSections(spark: SparkSession): String = {
     import graft.operators.{ExclusionJoin, ScaleJoins}
     import graft.pipeline.{CoolingPipeline, PaymentsGenerator}
     val keys = CoolingPipeline.reconcileKeys
     val payments = PaymentsGenerator.payments(spark, "2020-01-01", months = 3)
       .select(keys.map(org.apache.spark.sql.functions.col): _*)
-    ScaleJoins.writeBucketed(payments, "plans_hot_b", "id", 4)
-    ScaleJoins.writeBucketed(payments, "plans_cold_b", "id", 4)
-    val saved = spark.conf.get("spark.sql.requireAllClusterKeysForCoPartition")
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    try {
-      val frame = ExclusionJoin.countFrame(
-        spark.table("plans_hot_b"), spark.table("plans_cold_b"), keys)
-      frame.head() // finalize the adaptive plan
-      s"\n## q2_reconcile_bucketed (co-bucketed stores — zero data Exchange)\n\n```\n${formatted(frame)}```\n"
-    } finally spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", saved)
-  }
-
-  /** The Q2 reconcile over plain parquet stores (ExclusionJoin.count, the
-    * gate for the parquet/JDBC hot store): one aggregation over the signed
-    * union of both key projections — one data Exchange, no sort, no join
-    * (`PipelineSpec` pins this).
-    */
-  private def shuffleReconcileSection(spark: SparkSession): String = {
-    import graft.operators.ExclusionJoin
-    import graft.pipeline.{CoolingPipeline, PaymentsGenerator}
-    val keys = CoolingPipeline.reconcileKeys
+    Seq("hot", "cold").foreach(side => ScaleJoins.writeBucketed(payments, s"plans_${side}_b", "id", 4))
     val dir = Files.createTempDirectory("graft-plans-q2").toString
-    val payments = PaymentsGenerator.payments(spark, "2020-01-01", months = 3)
-      .select(keys.map(org.apache.spark.sql.functions.col): _*)
     Seq("hot", "cold").foreach(side => payments.write.parquet(s"$dir/$side"))
-    val frame = ExclusionJoin.diffCountFrame(
-      spark.read.parquet(s"$dir/hot"), spark.read.parquet(s"$dir/cold"), keys)
-    frame.collect() // runs this frame's own plan, so the adaptive plan prints final
-    s"\n## q2_reconcile_shuffle (parquet stores — one Exchange, no join)\n\n```\n${formatted(frame)}```\n"
+    def section(title: String, hot: org.apache.spark.sql.DataFrame, cold: org.apache.spark.sql.DataFrame) = {
+      val frame = ExclusionJoin.diffCountFrame(hot, cold, keys)
+      frame.collect() // runs this frame's own plan, so the adaptive plan prints final
+      s"\n## $title\n\n```\n${formatted(frame)}```\n"
+    }
+    section("q2_reconcile_bucketed (co-bucketed stores — zero data Exchange)",
+      spark.table("plans_hot_b"), spark.table("plans_cold_b")) +
+      section("q2_reconcile_shuffle (parquet stores — one Exchange, no join)",
+        spark.read.parquet(s"$dir/hot"), spark.read.parquet(s"$dir/cold"))
   }
 
   private def formatted(df: org.apache.spark.sql.DataFrame): String =

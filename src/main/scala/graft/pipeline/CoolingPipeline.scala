@@ -18,14 +18,17 @@ import graft.sources.{ColdStore, PaymentsSource, YearBucketedStore}
   *   delete target partition (K2, folded into dynamic overwrite)
   *   → export window (Q1: yq_dag.py:65-74)
   *   → reconcile (Q2: yq_dag.py:82-95) == 0        (C2 branch)
+  *   → advance watermark (C4: yq_dag.py:124-128)   — the commit point
   *   → drop source partitions (K3: yq_dag.py:106-122)
-  *   → advance watermark (C4: yq_dag.py:124-128)
   *
-  * Crash-safety = the reference's own story, kept deliberately: export is
-  * idempotent (partition overwrite), reconcile is read-only, and the
-  * watermark moves last — a crash anywhere re-runs the same window to the
-  * same end state. A failed reconciliation throws (C3) *before* anything
-  * destructive, exactly like `raise ValueError('Data are not equal!')`
+  * Crash-safety: the watermark advance is the one durable commit, and the
+  * same atomic write records the committed year's hot partitions as
+  * pending drop. Before it, export is idempotent (partition overwrite)
+  * and reconcile is read-only; after it, the drop is idempotent and every
+  * run first finishes a pending drop — so a crash anywhere converges, and
+  * a half-dropped year is never re-exported over its full copy.
+  * A failed reconciliation throws (C3) *before* anything destructive,
+  * exactly like `raise ValueError('Data are not equal!')`
   * (yq_dag.py:28-29).
   */
 final class CoolingPipeline(
@@ -61,29 +64,29 @@ final class CoolingPipeline(
       .withColumn("payment_year", Yql.unwrap(Yql.paymentYear(col("payment_date"))))
 
   /** Q2 "check" (yq_dag.py:82-95): exclusion-join cardinality across the
-    * two stores over the same window; 0 ⇔ the copy is faithful.
-    *
-    * Store-layout detection: when BOTH stores are year-co-bucketed
-    * catalog tables ([[graft.sources.YearBucketedStore]], the lake-to-lake
-    * 100 TB deployment) and the window is one whole year, the gate takes
-    * [[ExclusionJoin.countBucketed]] — zero data Exchange; the shuffle was
-    * paid once, at write time. Any other layout (the reference's live-PG
-    * hot store can't be bucket-aligned) takes the shuffle plan, which is
-    * the correct default there.
+    * two stores over the same window; 0 ⇔ the copy is faithful. One plan
+    * for every layout: [[ExclusionJoin.count]] over [[keySides]], run in
+    * the caller's session with no conf set.
     */
-  def reconcile(spark: SparkSession, start: LocalDate, end: LocalDate): Long =
-    bucketedPair(spark, start, end) match {
-      case Some((hotTable, coldTable)) =>
-        ExclusionJoin.countBucketed(spark, hotTable, coldTable, reconcileKeys)
-      case None =>
-        val (hot, coldSide) = keySides(spark, start, end)
-        ExclusionJoin.count(hot, coldSide, reconcileKeys)
-    }
+  def reconcile(spark: SparkSession, start: LocalDate, end: LocalDate): Long = {
+    val (hot, coldSide) = keySides(spark, start, end)
+    ExclusionJoin.count(hot, coldSide, reconcileKeys)
+  }
 
-  /** The window's reconcile-key projections of the hot and the cold store. */
+  /** The window's reconcile-key projections of the hot and the cold store
+    * — the one place that knows the store layout. Co-bucketed year tables
+    * ([[bucketedPair]], the lake-to-lake 100 TB deployment) keep their
+    * bucketing on `id` through the signed union, so the gate runs with
+    * zero data Exchange; any other layout (the reference's live-PG hot
+    * store can't be bucket-aligned) reads the two scans and shuffles once.
+    */
   private[graft] def keySides(spark: SparkSession, start: LocalDate, end: LocalDate): (DataFrame, DataFrame) = {
     def keys(df: DataFrame) = windowFilter(df, start, end).select(reconcileKeys.map(col): _*)
-    (keys(source.scan(spark)), keys(cold.scan(spark)))
+    val (hot, coldSide) = bucketedPair(spark, start, end) match {
+      case Some((hotTable, coldTable)) => (spark.table(hotTable), spark.table(coldTable))
+      case None => (source.scan(spark), cold.scan(spark))
+    }
+    (keys(hot), keys(coldSide))
   }
 
   /** Up to `n` key tuples that fail the window's reconcile, rendered as
@@ -100,8 +103,7 @@ final class CoolingPipeline(
 
   /** The co-bucketed table pair for this window, when the layout supports
     * the exchange-free gate: both stores year-bucketed with the SAME
-    * bucket count, a whole-year window, both year tables present. Exposed
-    * so specs can assert the plan the gate executes.
+    * bucket count, a whole-year window, both year tables present.
     */
   def bucketedPair(spark: SparkSession, start: LocalDate,
                    end: LocalDate): Option[(String, String)] = (source, cold) match {
@@ -114,12 +116,15 @@ final class CoolingPipeline(
     case _ => None
   }
 
-  /** One DAG run. Returns (year, rowsExported, diffCount), where
-    * rowsExported is the number of rows the export wrote, observed in-band
-    * on the export itself. For a whole-year window that is the cooled
-    * year's row count; for a mid-year start it counts the window.
+  /** One DAG run: finish the drop a crashed run left pending, then export,
+    * reconcile, advance (the commit) and drop. Returns (year,
+    * rowsExported, diffCount), where rowsExported is the number of rows
+    * the export wrote, observed in-band on the export itself. For a
+    * whole-year window that is the cooled year's row count; for a
+    * mid-year start it counts the window.
     */
   def runOnce(spark: SparkSession): (Int, Long, Long) = {
+    dropPending(spark)
     val start = watermark.value
     val end = watermark.windowEnd
     val year = start.getYear
@@ -136,23 +141,34 @@ final class CoolingPipeline(
           "offending keys (up to 10; + only in the hot store, - only in the cold store): " +
           offenders(spark, start, end, 10).mkString(", "))
 
-    // K3 destructive drop, then C4 watermark advance — in that order.
-    val parts = source.listPartitions(spark, s"payments_y$year")
-    source.dropPartitions(spark, parts)
+    // C4 watermark advance (the commit, recording the pending drop), then
+    // the K3 destructive drop — in that order.
     watermark.advance(start)
+    dropPending(spark)
 
     (year, exported.get("rows").asInstanceOf[Long], diff)
   }
 
+  /** K3 (yq_dag.py:106-122): drops the hot partitions the last committed
+    * advance recorded as pending. Idempotent — listing an already dropped
+    * prefix returns nothing — so a drop a crash cut short is finished by
+    * the next run, and a watermark with nothing pending drops nothing.
+    */
+  private def dropPending(spark: SparkSession): Unit =
+    watermark.pendingDrop.foreach(prefix =>
+      source.dropPartitions(spark, source.listPartitions(spark, prefix)))
+
   /** C5: drive runs until the hot store is exhausted — the driver-loop
     * form of the reference's hourly single-flight schedule
     * (yq_dag.py:45-52). [[CoolingStream]] wraps this in the genuine
-    * Trigger.AvailableNow streaming runner. `onRun` fires after each
+    * Trigger.AvailableNow streaming runner. A pending drop is finished
+    * first, even when no window is left to cool. `onRun` fires after each
     * completed year (observability hook; also how CoolingStreamSpec
     * injects a mid-run crash).
     */
   def runAll(spark: SparkSession, maxRuns: Int = 100,
       onRun: ((Int, Long, Long)) => Unit = _ => ()): Seq[(Int, Long, Long)] = {
+    dropPending(spark)
     val out = Seq.newBuilder[(Int, Long, Long)]
     var more = true
     var n = 0
@@ -180,10 +196,8 @@ final class CoolingPipeline(
 }
 
 object CoolingPipeline {
-  /** The 6-column reconciliation key (yq_dag.py:93-94) — shared by the
-    * per-run reconcile and the bucketed variant
-    * ([[graft.operators.ExclusionJoin.countBucketed]]): stores co-bucketed
-    * on `id` (the PK member) reconcile with zero Exchange.
+  /** The 6-column reconciliation key (yq_dag.py:93-94): stores
+    * co-bucketed on `id` (the PK member) reconcile with zero Exchange.
     */
   val reconcileKeys: Seq[String] = Seq("id", "doc_num", "accdt", "acckt", "amount", "state")
 }

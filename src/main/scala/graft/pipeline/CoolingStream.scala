@@ -15,7 +15,7 @@ import graft.sources.{ColdStore, ParquetPaymentsSource}
   *
   * Shape: a file stream over the hot store's partition directories is the
   * work signal; each micro-batch runs the cooling DAG
-  * ([[CoolingPipeline.runAll]] → export, reconcile, drop, advance) inside
+  * ([[CoolingPipeline.runAll]] → export, reconcile, advance, drop) inside
   * `foreachBatch`. The streaming machinery supplies exactly the three
   * properties the Airflow schedule provided:
   *
@@ -29,8 +29,9 @@ import graft.sources.{ColdStore, ParquetPaymentsSource}
   *    [[Watermark]] file is kept INSIDE the checkpoint directory, so one
   *    recovery root restores both. A batch that crashes mid-run replays
   *    on restart; `runOnce`'s ordering (idempotent export → read-only
-  *    reconcile → destructive drop → watermark last) makes the replay
-  *    converge to the same end state, year by year.
+  *    reconcile → watermark advance as the commit → idempotent drop,
+  *    finished by the next run when cut short) makes the replay converge
+  *    to the same end state, year by year.
   *
   * The batch's row content is deliberately never materialized — the file
   * source is a checkpointed work *signal* (which files have been seen),
@@ -45,7 +46,7 @@ object CoolingStream {
     * to `startDate` on first run) up to but excluding `stopBeforeYear`.
     * Returns the (year, rowsExported, diffCount) of each completed run.
     *
-    * `onYearCooled` fires after each year's watermark advance
+    * `onYearCooled` fires after each year's advance and drop
     * (observability; CoolingStreamSpec's crash injection).
     */
   def runAvailableNow(

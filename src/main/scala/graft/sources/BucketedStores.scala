@@ -13,10 +13,12 @@ import graft.operators.ScaleJoins
   * run (/root/reference/src/py/yq_dag.py:82-95). When BOTH stores are
   * Spark-managed tables — the lake-to-lake cooling deployment — that
   * shuffle can be paid once, at write time: each yearly unit is a catalog
-  * table bucketed (and sorted) on the PK `id` with a shared bucket count,
-  * and [[graft.operators.ExclusionJoin.countBucketed]] reconciles the pair
-  * with ZERO data Exchange in the plan (`BucketedReconcileSpec` pins the
-  * plan shape; `BucketedPipelineSpec` runs the whole cycle).
+  * table bucketed (and sorted) on the PK `id` with a shared bucket count.
+  * [[graft.pipeline.CoolingPipeline.reconcile]] reads the year pair and
+  * runs the same signed-union gate as for any other layout; the union
+  * keeps the scans' bucketing, so the plan has ZERO data Exchange, in
+  * the caller's session with no conf set (`BucketedReconcileSpec` pins
+  * the plan shape; `BucketedPipelineSpec` runs the whole cycle).
   *
   * Granularity is the YEAR — the pipeline's cooling window — so the
   * reconcile unit is a single bucketed table on each side (a union of

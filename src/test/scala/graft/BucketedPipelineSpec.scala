@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 import java.time.LocalDate
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,10 +14,12 @@ import graft.sources.{BucketedColdStore, BucketedHotStore}
 
 /** End-to-end cooling cycle over the year-co-bucketed store layout — the
   * lake-to-lake 100 TB deployment where the reconcile gate's shuffle was
-  * paid at write time. Asserts the pipeline DETECTS the layout (takes
-  * [[ExclusionJoin.countBucketed]]), that the gate's plan moves zero data
-  * through an Exchange, and that the full cool→reconcile→drop→watermark
-  * cycle reaches the same end state as the path-based pipeline.
+  * paid at write time. Asserts the pipeline DETECTS the layout (its
+  * [[CoolingPipeline.keySides]] read the year tables), that the gate it
+  * runs — [[ExclusionJoin.count]], in the caller's session with no conf
+  * set — moves zero data through an Exchange, and that the full
+  * cool→reconcile→advance→drop cycle reaches the same end state as the
+  * path-based pipeline.
   */
 class BucketedPipelineSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -49,24 +53,18 @@ class BucketedPipelineSpec extends AnyFunSuite {
 
   test("the gate's plan: bucketed scans, zero data Exchange") {
     val p = fixture
-    val Some((hotT, coldT)) =
-      p.bucketedPair(spark, LocalDate.parse("2020-01-01"), LocalDate.parse("2021-01-01"))
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevCoPart = spark.conf.get("spark.sql.requireAllClusterKeysForCoPartition")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    try {
-      val frame = ExclusionJoin.countFrame(
-        spark.table(hotT), spark.table(coldT), p.reconcileKeys)
-      assert(frame.head.getLong(0) == 0L)
-      val plan = frame.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed gate must not shuffle data:\n$plan")
-      assert(plan.contains("Bucketed: true"), s"gate must scan bucketed:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", prevCoPart)
-    }
+    val s = LocalDate.parse("2020-01-01"); val e = LocalDate.parse("2021-01-01")
+    assert(p.bucketedPair(spark, s, e).isDefined)
+    // the frame the gate runs, in the caller's session as it is
+    val (hot, coldSide) = p.keySides(spark, s, e)
+    val frame = ExclusionJoin.diffCountFrame(hot, coldSide, p.reconcileKeys)
+    assert(frame.collect().head.getLong(0) == 0L) // collect() finalizes frame's own adaptive plan
+    val plan = frame.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange hashpartitioning"),
+      s"bucketed gate must not shuffle data:\n$plan")
+    val nodes = new AdaptiveSparkPlanHelper {}.collect(frame.queryExecution.executedPlan) { case n => n }
+    assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]), plan)
+    assert(plan.contains("Bucketed: true"), s"gate must scan bucketed:\n$plan")
   }
 
   test("corruption is still caught through the bucketed gate") {

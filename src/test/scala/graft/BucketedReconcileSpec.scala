@@ -7,12 +7,13 @@ import graft.operators.{ExclusionJoin, ScaleJoins}
 import graft.pipeline.{CoolingPipeline, PaymentsGenerator}
 
 /** The 100 TB shape of the pipeline's Q2 gate: hot and cold stores written
-  * co-bucketed on the PK, reconciled with ZERO Exchange in the plan — the
-  * two full-corpus shuffles of the unbucketed reconcile are paid once, at
-  * write time. Bucketing on `id` (a subset of the 6 reconcile keys) is
-  * enough: equal key tuples imply equal ids, so both the per-side
-  * aggregations and the full-outer join are satisfied by the bucketed scan
-  * partitioning.
+  * co-bucketed on the PK, reconciled by [[ExclusionJoin.count]] with ZERO
+  * data Exchange in the plan — the full-corpus shuffle of the unbucketed
+  * reconcile is paid once, at write time. Bucketing on `id` (a subset of
+  * the 6 reconcile keys) is enough: equal key tuples imply equal ids, and
+  * the signed union keeps both scans' common bucketing, which satisfies
+  * the aggregation on the keys — in the caller's session, with no conf
+  * set. The join form ([[ExclusionJoin.countFrame]]) is the reference.
   */
 class BucketedReconcileSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -20,40 +21,33 @@ class BucketedReconcileSpec extends AnyFunSuite {
   private val keys = CoolingPipeline.reconcileKeys
 
   test("co-bucketed reconcile: zero Exchange, same answer as the unbucketed path") {
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevCoPart = spark.conf.get("spark.sql.requireAllClusterKeysForCoPartition")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // no broadcast hiding exchanges
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false") // subset co-partitioning
-    try {
-      val payments = PaymentsGenerator.payments(spark, "2020-01-01", months = 6)
-        .select(keys.map(col): _*)
-      ScaleJoins.writeBucketed(payments, "hot_bucketed", "id", 4)
-      // cold copy: one row missing + one row duplicated = 2 mismatches
-      val corrupted = payments.where(col("id") =!= 11L)
-        .unionAll(payments.where(col("id") === 17L))
-      ScaleJoins.writeBucketed(corrupted, "cold_bucketed", "id", 4)
+    val payments = PaymentsGenerator.payments(spark, "2020-01-01", months = 6)
+      .select(keys.map(col): _*)
+    ScaleJoins.writeBucketed(payments, "hot_bucketed", "id", 4)
+    // cold copy: one row missing + one row duplicated = 2 mismatches
+    val corrupted = payments.where(col("id") =!= 11L)
+      .unionAll(payments.where(col("id") === 17L))
+    ScaleJoins.writeBucketed(corrupted, "cold_bucketed", "id", 4)
 
-      val frame = ExclusionJoin.countFrame(
-        spark.table("hot_bucketed"), spark.table("cold_bucketed"), keys)
-      val n = frame.head.getLong(0)
-      assert(n == 2L)
-      assert(n == ExclusionJoin.count(payments, corrupted, keys)) // ≡ unbucketed
-      assert(ExclusionJoin.countBucketed(spark, "hot_bucketed", "cold_bucketed", keys) == 2L)
+    val n = ExclusionJoin.count(spark.table("hot_bucketed"), spark.table("cold_bucketed"), keys)
+    assert(n == 2L)
+    assert(n == ExclusionJoin.count(payments, corrupted, keys)) // ≡ unbucketed
+    assert(n == ExclusionJoin.countFrame( // ≡ the join-form reference
+      spark.table("hot_bucketed"), spark.table("cold_bucketed"), keys).head.getLong(0))
 
-      // no data shuffle: the only allowed Exchange is the 1-row rollup
-      // (SinglePartition over 4 partial sums — scale-independent)
-      val plan = frame.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed reconcile must not shuffle data:\n$plan")
-      assert(plan.contains("Bucketed: true"), s"scan must use bucketing:\n$plan")
+    // no data shuffle: the only allowed Exchange is the 1-row rollup
+    // (SinglePartition over 4 partial sums — scale-independent)
+    val frame = ExclusionJoin.diffCountFrame(
+      spark.table("hot_bucketed"), spark.table("cold_bucketed"), keys)
+    assert(frame.collect().head.getLong(0) == 2L) // finalizes frame's own adaptive plan
+    val plan = frame.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange hashpartitioning"),
+      s"bucketed reconcile must not shuffle data:\n$plan")
+    assert(plan.contains("Bucketed: true"), s"scan must use bucketing:\n$plan")
 
-      // faithful copy reconciles to 0 through the same exchange-free plan
-      ScaleJoins.writeBucketed(payments, "cold_bucketed_ok", "id", 4)
-      assert(ExclusionJoin.countBucketed(spark, "hot_bucketed", "cold_bucketed_ok", keys) == 0L)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", prevCoPart)
-    }
+    // faithful copy reconciles to 0 through the same exchange-free plan
+    ScaleJoins.writeBucketed(payments, "cold_bucketed_ok", "id", 4)
+    assert(ExclusionJoin.count(spark.table("hot_bucketed"), spark.table("cold_bucketed_ok"), keys) == 0L)
   }
 
   test("bucket-count mismatch still reconciles correctly (plan falls back to shuffle)") {
@@ -61,15 +55,16 @@ class BucketedReconcileSpec extends AnyFunSuite {
       .select(keys.map(col): _*)
     ScaleJoins.writeBucketed(payments, "hot_b8", "id", 8)
     ScaleJoins.writeBucketed(payments, "cold_b4", "id", 4)
-    assert(ExclusionJoin.countBucketed(spark, "hot_b8", "cold_b4", keys) == 0L)
+    assert(ExclusionJoin.count(spark.table("hot_b8"), spark.table("cold_b4"), keys) == 0L)
   }
 
-  test("countBucketed never relaxes the caller session's co-partition flag") {
+  test("the gate sets no session conf") {
     val flag = "spark.sql.requireAllClusterKeysForCoPartition"
     assert(spark.conf.get(flag) == "true", "precondition: Spark default in caller session")
-    // the gate plans in a derived session; the caller's conf is untouched
-    // before, during (no shared SQLConf to race on), and after the call
-    assert(ExclusionJoin.countBucketed(spark, "hot_b8", "cold_b4", keys) == 0L)
+    val before = spark.conf.getAll
+    // a whole bucketed gate, in the caller's session
+    assert(ExclusionJoin.count(spark.table("hot_bucketed"), spark.table("cold_bucketed_ok"), keys) == 0L)
     assert(spark.conf.get(flag) == "true")
+    assert(spark.conf.getAll == before)
   }
 }

@@ -14,9 +14,10 @@ import graft.sources.{BucketedColdStore, BucketedHotStore}
   * to [[BucketedPipelineSpec]] (which pins the zero-Exchange plan shape on
   * a 24-month fixture). Here the full 61-month, 2,675,520-row corpus of
   * /root/reference/img/YQ_Federation_Query.png cools through the
-  * year-co-bucketed store pair, and the Q2 gate is timed BOTH ways on the
-  * same cooled year: the exchange-free bucketed plan vs the default
-  * shuffle plan (same tables, bucketing disabled in a derived session).
+  * year-co-bucketed store pair, and the Q2 gate ([[ExclusionJoin.count]])
+  * is timed BOTH ways on the same cooled year: the exchange-free bucketed
+  * plan in the caller's session vs the shuffle plan (same tables,
+  * bucketing disabled in a derived session).
   * The two wall-times land in SCALE.md §Reconcile so the write-time-vs-
   * read-time shuffle trade is a recorded number, not an argument.
   */
@@ -61,7 +62,7 @@ class BucketedReferenceScaleSpec extends AnyFunSuite {
       }.min
 
     val bucketedSecs = minOf3(() =>
-      ExclusionJoin.countBucketed(spark, hotT, coldT, p.reconcileKeys))
+      ExclusionJoin.count(spark.table(hotT), spark.table(coldT), p.reconcileKeys))
 
     val plain = spark.newSession() // same data through the shuffle plan
     plain.conf.set("spark.sql.sources.bucketing.enabled", "false")
@@ -69,10 +70,8 @@ class BucketedReferenceScaleSpec extends AnyFunSuite {
       ExclusionJoin.count(plain.table(hotT), plain.table(coldT), p.reconcileKeys))
 
     // sanity that the two timings measured the plans they claim
-    val gate = spark.newSession()
-    gate.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    val bucketedPlan = ExclusionJoin.countFrame(
-      gate.table(hotT), gate.table(coldT), p.reconcileKeys)
+    val bucketedPlan = ExclusionJoin.diffCountFrame(
+      spark.table(hotT), spark.table(coldT), p.reconcileKeys)
       .queryExecution.executedPlan.toString
     assert(!bucketedPlan.contains("Exchange hashpartitioning"))
     val shufflePlan = ExclusionJoin.diffCountFrame(

@@ -168,4 +168,67 @@ class PipelineSpec extends AnyFunSuite {
     assert(wm.advance(LocalDate.parse("2021-01-01")) == LocalDate.parse("2022-01-01"))
     assert(wm.value == LocalDate.parse("2022-01-01"))
   }
+
+  /** A 13-month hot store (2020 + 2021-01) and its pipeline parts, for
+    * the crash points; `crashDrop(n)` is a view of the hot store whose
+    * drop removes the first `n` partitions it is given, then dies.
+    */
+  private final class CrashFixture(tag: String) {
+    val dir = Files.createTempDirectory(s"graft-pipeline-$tag").toString
+    PaymentsGenerator.writeHotStore(spark, s"$dir/hot", "2020-01-01", months = 13)
+    val hot = new ParquetPaymentsSource(s"$dir/hot")
+    val cold = new ColdStore(s"$dir/cold")
+    val wm = new Watermark(s"$dir/watermark.json")
+    wm.initIfAbsent(LocalDate.parse("2020-01-01"))
+
+    def crashDrop(n: Int): CoolingPipeline = new CoolingPipeline(new PaymentsSource {
+      def scan(spark: SparkSession): DataFrame = hot.scan(spark)
+      def listPartitions(spark: SparkSession, prefix: String): Seq[String] =
+        hot.listPartitions(spark, prefix)
+      def dropPartitions(spark: SparkSession, names: Seq[String]): Unit = {
+        hot.dropPartitions(spark, names.take(n))
+        throw new RuntimeException("injected crash")
+      }
+    }, cold, wm)
+
+    def restarted: CoolingPipeline = new CoolingPipeline(hot, cold, wm)
+
+    /** Row count and content digest of one year's reconcile keys. */
+    def digest(df: DataFrame): (Long, Long) = {
+      val r = df.agg(count(lit(1)), bit_xor(xxhash64(CoolingPipeline.reconcileKeys.map(col): _*))).head
+      (r.getLong(0), r.getLong(1))
+    }
+  }
+
+  test("crash after 6 of 12 drops: the restart finishes the drop, 2020's copy stays whole, 2021 cools") {
+    val f = new CrashFixture("crash-mid-drop")
+    val want = f.digest(f.hot.scan(spark).where(year(col("payment_date")) === 2020))
+    assert(want._1 == 527040L)
+    val crash = intercept[RuntimeException](f.crashDrop(6).runOnce(spark))
+    assert(crash.getMessage == "injected crash")
+    assert(f.hot.listPartitions(spark, "payments_y2020").size == 6)
+
+    // the restart must not re-cool the 6 surviving months over the full copy
+    assert(f.restarted.runAll(spark) == Seq((2021, 44640L, 0L)))
+    assert(f.hot.listPartitions(spark, "payments_y").isEmpty)
+    assert(f.digest(f.cold.scan(spark).where(col("payment_year") === 2020)) == want)
+    assert(f.wm.value == LocalDate.parse("2022-01-01"))
+  }
+
+  test("crash after advance, before drop: the restart removes 2020's leftover hot partitions and cools 2021") {
+    val f = new CrashFixture("crash-before-drop")
+    intercept[RuntimeException](f.crashDrop(0).runOnce(spark))
+    // the advance committed 2020 and recorded its drop as pending
+    assert(f.wm.value == LocalDate.parse("2021-01-01"))
+    assert(f.wm.pendingDrop.contains("payments_y2020"))
+    assert(f.hot.listPartitions(spark, "payments_y2020").size == 12)
+
+    // a pending drop is finished even by a run that opens no window
+    assert(f.restarted.runAll(spark, maxRuns = 0).isEmpty)
+    assert(f.hot.listPartitions(spark, "payments_y2020").isEmpty)
+    assert(f.restarted.runAll(spark) == Seq((2021, 44640L, 0L)))
+    assert(f.hot.listPartitions(spark, "payments_y").isEmpty)
+    assert(f.cold.scan(spark).where(col("payment_year") === 2020).count() == 527040L)
+    assert(f.wm.value == LocalDate.parse("2022-01-01"))
+  }
 }
