@@ -23,9 +23,9 @@ object Gen {
 /** CLI for the cooling pipeline — the operational surface of the
   * reference's DAG (`airflow trigger YQ_DEMO` → `java … graft.Cool`).
   *
-  * Usage: `graft.Cool <hotDir> <coldDir> <watermarkFile> [initDate] [maxRuns]`
+  * Usage: `graft.Cool <hotDir> <coldDir> <watermarkFile> [initDate=YYYY-01-01] [maxRuns]`
   *
-  * Each run moves one year-window hot→cold, reconciles, advances the
+  * Each run moves one calendar year hot→cold, reconciles, advances the
   * watermark, and drops the source partitions; `maxRuns` > 1 replays the
   * hourly cadence until the hot store is drained (the reference's
   * `@hourly` single-flight loop, compressed).
@@ -33,7 +33,7 @@ object Gen {
 object Cool {
   def main(args: Array[String]): Unit = {
     if (args.length < 3) {
-      System.err.println("usage: graft.Cool <hotDir> <coldDir> <watermarkFile> [initDate] [maxRuns]")
+      System.err.println("usage: graft.Cool <hotDir> <coldDir> <watermarkFile> [initDate=YYYY-01-01] [maxRuns]")
       sys.exit(2)
     }
     val Array(hotDir, coldDir, wmFile) = args.take(3)
@@ -49,7 +49,7 @@ object Cool {
     results.foreach { case (year, rows, diff) =>
       println(s"""{"year":$year,"rows_exported":$rows,"reconcile_diff":$diff}""")
     }
-    println(s"""{"runs":${results.size},"watermark":"${wm.value}"}""")
+    println(s"""{"runs":${results.size},"watermark":"${LocalDate.of(wm.year, 1, 1)}"}""")
     spark.stop()
   }
 }

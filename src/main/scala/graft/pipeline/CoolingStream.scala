@@ -16,12 +16,12 @@ import graft.sources.{ColdStore, ParquetPaymentsSource}
   * Shape: a file stream over the hot store's partition directories is the
   * work signal; each micro-batch runs the cooling DAG
   * ([[CoolingPipeline.runAll]] → export, reconcile, advance, drop) inside
-  * `foreachBatch`. The streaming machinery supplies exactly the three
-  * properties the Airflow schedule provided:
+  * `foreachBatch`. Together with the watermark's lease this supplies
+  * exactly the three properties the Airflow schedule provided:
   *
-  *  - **single-flight**: one micro-batch executes at a time, and a second
-  *    concurrent start on the same checkpoint fails on the checkpoint
-  *    lock (`max_active_runs=1`);
+  *  - **single-flight**: `runAll` holds the [[Watermark.lease]] for the
+  *    whole drain, so a second driver on the same watermark (another
+  *    stream, [[graft.Cool]]) is refused at once (`max_active_runs=1`);
   *  - **catch-up on demand**: `Trigger.AvailableNow` drains everything
   *    present, then terminates — re-launching on any cadence (cron, the
   *    next Airflow, …) picks up newly landed months (`catchup=False`);
@@ -75,7 +75,7 @@ object CoolingStream {
       .option("checkpointLocation", s"$checkpointDir/stream")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (_: Dataset[Row], _: Long) =>
-        val cap = math.max(0L, stopBeforeYear.toLong - wm.value.getYear)
+        val cap = math.max(0L, stopBeforeYear.toLong - wm.year)
         out ++= pipeline.runAll(spark, maxRuns = math.min(cap, 100L).toInt,
           onRun = onYearCooled)
         ()

@@ -1,35 +1,44 @@
 package graft.pipeline
 
 import java.nio.charset.StandardCharsets
-import java.nio.channels.FileChannel
+import java.nio.channels.{FileChannel, OverlappingFileLockException}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import java.time.LocalDate
 
 /** The pipeline's only mutable state: the `EXP_DATE` watermark the reference
   * keeps in an Airflow Variable (/root/reference/src/py/yq_dag.py:13-14,
-  * 31-33; SURVEY.md §1.5, C4). One run processes `[value, value + 1 year)`
-  * and advances the value once the copy is verified. The advance is the
-  * run's commit point, so [[advance]] writes atomically (temp file +
-  * atomic move), records the committed year's hot partitions as
-  * [[pendingDrop]] in that same write, and moves only from the value the
-  * run started at: two overlapping drivers would otherwise each advance
-  * once (2020 → 2021 → 2022) and strand 2021's hot partitions.
+  * 31-33; SURVEY.md §1.5, C4). It is always January 1: one run cools the
+  * calendar [[year]] it names and advances it by one year once the copy is
+  * verified. The advance is the run's commit point, so [[advance]] writes
+  * atomically (temp file + atomic move), records the committed year's hot
+  * partitions as [[pendingDrop]] in that same write, and moves only from
+  * the year the run started at; the run's [[lease]] keeps every other
+  * driver out from its first read to its last drop.
   */
 final class Watermark(path: String) {
 
   private def p: Path = Paths.get(path)
 
-  def initIfAbsent(start: LocalDate): Unit =
-    if (!Files.exists(p)) write(start, None)
+  /** Writes `start`, which must be January 1, when no watermark exists. */
+  def initIfAbsent(start: LocalDate): Unit = {
+    val year = yearOf(start) // checked even when the file exists
+    if (!Files.exists(p)) write(year, None)
+  }
 
-  // {"EXP_DATE": "YYYY-MM-DD"[, "PENDING_DROP": "payments_yYYYY"]}
+  private def yearOf(d: LocalDate): Int =
+    if (d == LocalDate.of(d.getYear, 1, 1)) d.getYear
+    else throw new IllegalArgumentException(
+      s"watermark $path: EXP_DATE $d is not January 1; a run cools one calendar year")
+
+  // {"EXP_DATE": "YYYY-01-01"[, "PENDING_DROP": "payments_yYYYY"]}
   private def field(name: String): Option[String] = {
     val txt = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
     s""""$name"\\s*:\\s*"([^"]*)"""".r.findFirstMatchIn(txt).map(_.group(1))
   }
 
-  def value: LocalDate = field("EXP_DATE") match {
-    case Some(d) => LocalDate.parse(d)
+  /** The calendar year the next run cools. */
+  def year: Int = field("EXP_DATE") match {
+    case Some(d) => yearOf(LocalDate.parse(d))
     case None => throw new IllegalStateException(s"malformed watermark file $path")
   }
 
@@ -39,38 +48,39 @@ final class Watermark(path: String) {
     */
   def pendingDrop: Option[String] = field("PENDING_DROP")
 
-  def windowEnd: LocalDate = value.plusYears(1)
-
-  /** Compare-and-set: moves `expected` to `expected + 1 year` and records
-    * `expected`'s year as [[pendingDrop]], re-reading the value under an
-    * exclusive lock on the sidecar `.lock` file (the JVM monitor covers
-    * drivers on threads of one process, where file locks are not
-    * re-entrant). Throws without writing when another driver has already
-    * moved the value.
+  /** Compare-and-set, called under the [[lease]]: moves `expected` to
+    * `expected + 1` and records `expected` as [[pendingDrop]]. Throws
+    * without writing when the file holds another year.
     */
-  def advance(expected: LocalDate): LocalDate = Watermark.synchronized {
-    val lockFile = FileChannel.open(Paths.get(path + ".lock"),
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    try {
-      lockFile.lock() // released by close
-      val cur = value
-      if (cur != expected)
-        throw new IllegalStateException(
-          s"watermark $path is at $cur, not the $expected this run started from: " +
-            "another driver advanced it; this run's advance is refused")
-      val next = expected.plusYears(1)
-      write(next, Some(s"payments_y${expected.getYear}"))
-      next
-    } finally lockFile.close()
+  def advance(expected: Int): Int = {
+    val cur = year
+    if (cur != expected)
+      throw new IllegalStateException(
+        s"watermark $path is at $cur, not the $expected this run started from: " +
+          "another driver advanced it; this run's advance is refused")
+    write(expected + 1, Some(s"payments_y$expected"))
+    expected + 1
   }
 
-  private def write(d: LocalDate, pendingDrop: Option[String]): Unit = {
+  /** Runs `body` holding an exclusive `tryLock` on the sidecar `.lock`
+    * file, freed when `body` ends or the process dies. A lock another
+    * driver holds refuses the run before `body` reads anything: `tryLock`
+    * returns null when another process holds it, and throws when this JVM does.
+    */
+  def lease[T](body: => T): T = {
+    val ch = FileChannel.open(Paths.get(s"$path.lock"), StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+    try {
+      val held = try ch.tryLock() catch { case _: OverlappingFileLockException => null }
+      if (held == null)
+        throw new IllegalStateException(s"watermark lock $path.lock is held by another driver; this run is refused")
+      body
+    } finally ch.close() // releases the lock
+  }
+
+  private def write(year: Int, pendingDrop: Option[String]): Unit = {
     val tmp = Paths.get(path + ".tmp")
     val pending = pendingDrop.fold("")(prefix => s""", "PENDING_DROP": "$prefix"""")
-    Files.write(tmp, s"""{"EXP_DATE": "$d"$pending}""".getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, s"""{"EXP_DATE": "${LocalDate.of(year, 1, 1)}"$pending}""".getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 }
-
-/** Process-wide monitor for [[Watermark.advance]]. */
-object Watermark

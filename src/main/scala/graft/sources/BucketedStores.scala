@@ -71,7 +71,7 @@ final class BucketedHotStore(val namespace: String, val buckets: Int)
   * idempotency of the path-based [[ColdStore]]: the year table is
   * replaced whole, so a crashed export re-runs to the same end state.
   * The one-row-per-year `collect` is bounded by construction (the export
-  * window is a single year).
+  * is a single year).
   */
 final class BucketedColdStore(val namespace: String, val buckets: Int)
     extends ColdStore(s"catalog:$namespace") with YearBucketedStore {
@@ -96,12 +96,6 @@ final class BucketedColdStore(val namespace: String, val buckets: Int)
     years.foreach { y =>
       ScaleJoins.writeBucketed(df.where(col("payment_year") === y), yearTable(y), "id", buckets)
     }
-  }
-
-  override def deleteYear(spark: SparkSession, year: Int): Boolean = {
-    val existed = spark.catalog.tableExists(yearTable(year))
-    spark.sql(s"DROP TABLE IF EXISTS ${yearTable(year)}")
-    existed
   }
 
   override def years(spark: SparkSession): Seq[Int] =

@@ -36,18 +36,15 @@ class ColdStore(val base: String) {
     * partition overwrite replaces exactly the `payment_year` values present
     * in `df` (the reference separately deletes the prefix then inserts —
     * yq_dag.py:16-19 + 71-73; SURVEY.md §1.4 maps both onto this).
-    * Requires `spark.sql.sources.partitionOverwriteMode=dynamic`
-    * (GraftSession sets it).
+    * The writer sets the dynamic mode itself: under the session's
+    * default `static` mode the overwrite would delete every other year.
     */
   def exportYear(df: DataFrame): Unit =
     df.write
       .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("payment_year")
       .parquet(base)
-
-  /** K2 standalone (for crash-recovery tests): drop one year's objects. */
-  def deleteYear(spark: SparkSession, year: Int): Boolean =
-    FsUtil.delete(spark, s"$base/payment_year=$year")
 
   def years(spark: SparkSession): Seq[Int] =
     FsUtil.listDir(spark, base)
