@@ -21,7 +21,7 @@ object ABTime {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.prepare(GraftSession.local("graft-ab"))
     val fn = SparkEntry.queries(name)
-    def runOnce(): Long = fn(spark, sfDir).queryExecution.toRdd.count()
+    def runOnce(): Rep = Rep.time(spark)(fn(spark, sfDir))
     runOnce() // JIT + codegen warm
     val best = Array(Double.MaxValue, Double.MaxValue)
     (1 to cycles).foreach { c =>
@@ -29,9 +29,7 @@ object ABTime {
         confs.foreach { case (k, a, b) => spark.conf.set(k, if (arm == 0) a else b) }
         spark.sharedState.cacheManager.clearCache()
         runOnce() // rebuild caches under this arm's conf (untimed)
-        val t = (1 to 2).map { _ =>
-          val t0 = System.nanoTime(); runOnce(); (System.nanoTime() - t0) / 1e9
-        }.min
+        val t = (1 to 2).map(_ => runOnce().wallS).min
         best(arm) = math.min(best(arm), t)
         println(f"cycle $c arm $arm: $t%.3f s")
       }

@@ -4,7 +4,10 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main (driver contract): times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and emits ONE JSON line. A warmup pass at sf0.001
   * first exercises codegen + JIT so the measured pass reflects steady-state
-  * engine cost, not first-query JVM compilation.
+  * engine cost, not first-query JVM compilation. Every rep is a [[Rep]];
+  * the fastest rep's layers land one JSON line per query in
+  * `target/bench_layers.json` (and `BENCH_layers.json` for the full
+  * battery). `SPARK_GRAFT_BENCH_ONLY=<q>` times one query the same way.
   */
 object Bench {
   /** Deterministic-heavy trainers run once + one confirm (min-of-2): the
@@ -105,6 +108,7 @@ object Bench {
     // next use (min-of-3 absorbs the rebuild in run 1, same as a cold
     // family start).
     var prevFamily: Int = -1
+    val passStartMs = System.currentTimeMillis()
     val results = selected.toSeq
       .sortBy { case (name, _) => (SparkEntry.moduleOf(name), name) }
       .map { case (name, fn) =>
@@ -121,31 +125,27 @@ object Bench {
         }
       prevFamily = family
       val reps = if (DeterministicHeavy(name)) 2 else 3
-      val runs = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        // materialize the FULL result (toRdd executes the query's own
-        // physical plan), never df.count(): the count() fast path lets the
-        // optimizer prune every per-row projection and even whole
-        // unique-key left joins whose output cardinality is derivable from
-        // the scans — projection-shaped queries (t1-t7, d15/d16's
-        // id-restore tail) were being timed as bare parquet scan-counts
-        val ok = try { fn(spark, sfDir).queryExecution.toRdd.count(); true } catch {
+      val runs = (1 to reps).flatMap { _ =>
+        try Some(Rep.time(spark)(fn(spark, sfDir))) catch {
           case t: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${t.getClass.getSimpleName}: ${t.getMessage}")
-            false
+            None
         }
-        ((System.nanoTime() - t0) / 1e9, ok)
       }
-      val good = runs.filter(_._2).map(_._1)
-      val best = if (good.nonEmpty) Some(good.min) else None
+      val best = if (runs.nonEmpty) Some(runs.minBy(_.wallS)) else None
       // per-query progress line (plain text, NOT JSON — the driver must
       // only ever see one parseable line): survives any stdout-tail
       // truncation of the final summary
-      System.err.println(s"[bench] $name ${best.map(s4).getOrElse("FAILED")}")
+      System.err.println(s"[bench] $name ${best.map(r => s4(r.wallS)).getOrElse("FAILED")}")
       (name, best)
     }
     Intermediates.releaseAll()
-    val ok = results.collect { case (k, Some(v)) => k -> v }
+    // the fastest rep's layers, one JSON line per query; start_s places the
+    // rep in the measured pass, so a contended window shows in the record
+    val layers = results.collect { case (k, Some(r)) =>
+      r.json("query" -> k, "start_s" -> (r.startMs - passStartMs) / 1e3)
+    }.map(_ + "\n").mkString
+    val ok = results.collect { case (k, Some(r)) => k -> r.wallS }
     val failed = results.collect { case (k, None) => k }
     // 4-decimal (0.1 ms) timings: full-double rendering made the 104-query
     // line >4 KiB and the round-6 driver artifact truncated it mid-line
@@ -165,14 +165,15 @@ object Bench {
     // if the driver's stdout capture truncates
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
     // a filtered run must not clobber the full-battery artifacts
-    val paths = if (only.isEmpty) Seq("target/bench.json", "BENCH_last.json")
-                else Seq("target/bench_only.json")
-    for (p <- paths)
+    def write(p: String, text: String): Unit =
       java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    if (only.isEmpty)
-      java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_compact.json"),
-        compact.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    write("target/bench_layers.json", layers)
+    if (only.isEmpty) {
+      Seq("target/bench.json", "BENCH_last.json").foreach(write(_, line))
+      write("target/bench_compact.json", compact)
+      write("BENCH_layers.json", layers)
+    } else write("target/bench_only.json", line)
     spark.stop()
   }
 }

@@ -15,13 +15,19 @@ import org.apache.spark.sql.SparkSession
   * cluster AQE's coalescing makes the initial number mostly a ceiling.
   */
 object GraftSession {
-  def builder(appName: String = "graft", master: Option[String] = None): SparkSession.Builder = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val b = SparkSession
+
+  /** Local session for tests/benchmarks: `local[cores]`, or, with `cores`
+    * unset, `SPARK_GRAFT_CPUS` (default: every available processor). */
+  def local(appName: String = "graft", cores: Int = 0): SparkSession = {
+    val n = if (cores > 0) cores.toString
+      else sys.env.getOrElse("SPARK_GRAFT_CPUS",
+        Runtime.getRuntime.availableProcessors().toString)
+    val s = SparkSession
       .builder()
       .appName(appName)
+      .master(s"local[$n]")
       .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", n)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -45,15 +51,7 @@ object GraftSession {
         s"${sys.props("java.io.tmpdir")}/graft-warehouse") // keep catalog tables out of the repo
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.ui.enabled", "false")
-    master.fold(b)(m => b.master(m))
-  }
-
-  /** Local session for tests/benchmarks. */
-  def local(appName: String = "graft", cores: Int = 0): SparkSession = {
-    val n = if (cores > 0) cores.toString
-      else sys.env.getOrElse("SPARK_GRAFT_CPUS",
-        Runtime.getRuntime.availableProcessors().toString)
-    val s = builder(appName, Some(s"local[$n]")).config("spark.sql.shuffle.partitions", n).getOrCreate()
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

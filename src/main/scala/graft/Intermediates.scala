@@ -26,7 +26,7 @@ object Intermediates {
   /** Persist `df`, register it for release, and return the frame rebased
     * onto its `InMemoryRelation` leaf ([[GraftCacheBridge.cachedLeaf]]):
     * downstream trees stay shallow, so Dataset-op eager re-analysis stops
-    * dominating build time (r17 PhaseTime: 3.5-6.6 s per v10 build).
+    * dominating build time (r17 phase profile: 3.5-6.6 s per v10 build).
     * Execution is unchanged — the cache manager substitutes the same
     * relation at planning time anyway.
     */

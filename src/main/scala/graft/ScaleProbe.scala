@@ -270,15 +270,16 @@ object ScaleProbe {
   private final case class Cell(status: String, sec: Double = -1.0, rows: Long = -1L,
                                 detail: String = "")
 
-  /** Min-of-`reps` wall-clock of building the query (construction is
-    * classified by [[classifyConstruction]]) and materializing the FULL
-    * result (`toRdd.count()` — df.count()'s fast path lets the optimizer
-    * prune per-row projections and unique-key left joins, timing
-    * projection-shaped queries as bare scan-counts) plus the result
-    * cardinality. Rows disambiguate the ratio analysis: a candidate-driven
-    * operator (near-dup pairs) legitimately costs Θ(output), so runtime
-    * ratio ≈ row ratio is linear-in-work even when it exceeds the data
-    * growth factor.
+  /** A construction outcome ([[classifyConstruction]]) thrown out of a rep. */
+  private final case class Unbuilt(outcome: (String, String))
+    extends Exception with scala.util.control.NoStackTrace
+
+  /** Min-of-`reps` [[Rep]] wall-clock of building the query (construction
+    * is classified by [[classifyConstruction]]) and materializing the FULL
+    * result, plus the result cardinality. Rows disambiguate the ratio
+    * analysis: a candidate-driven operator (near-dup pairs) legitimately
+    * costs Θ(output), so runtime ratio ≈ row ratio is linear-in-work even
+    * when it exceeds the data growth factor.
     */
   private def time(spark: SparkSession, dir: String, name: String,
                    fn: (SparkSession, String) => DataFrame, reps: Int): Cell = {
@@ -297,15 +298,16 @@ object ScaleProbe {
       // measure the cold query, not rep2 reading rep1's persisted
       // intermediates (which understated d4/d5 by >10x in the first run)
       Intermediates.releaseAll()
-      val t0 = System.nanoTime()
       val attempt = Future {
         spark.sparkContext.setJobGroup(s"probe-$name", name, interruptOnCancel = true)
-        try classifyConstruction(fn(spark, dir)).map(_.queryExecution.toRdd.count())
+        try Right(Rep.time(spark)(
+          classifyConstruction(fn(spark, dir)).fold(c => throw Unbuilt(c), identity)))
+        catch { case Unbuilt(c) => Left(c) }
         finally spark.sparkContext.clearJobGroup()
       }
       try Await.result(attempt, budgetFor(name).seconds) match {
-        case Right(n) =>
-          val c = Cell("ok", (System.nanoTime() - t0) / 1e9, n)
+        case Right(r) =>
+          val c = Cell("ok", r.wallS, r.rows)
           if (best.forall(_.sec > c.sec)) best = Some(c)
         case Left((status, detail)) =>
           System.err.println(s"[probe] ${status.toUpperCase}: $name: $detail")

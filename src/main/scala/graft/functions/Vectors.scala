@@ -20,9 +20,6 @@ object Vectors {
     */
   def toDouble(v: Column): Column = transform(v, x => x.cast("double"))
 
-  /** Sequential left-fold sum of a double array. */
-  def foldSum(v: Column): Column = aggregate(v, lit(0.0), (acc, x) => acc + x)
-
   /** dot(a, b) over already-double arrays: the codegen'd single-pass loop
     * ([[DotProductDouble]] — registered by GraftSession.prepare). Bit-equal
     * to the fold-of-products form, ~an order of magnitude faster inside
@@ -35,9 +32,6 @@ object Vectors {
 
   /** dot(a, b) with on-the-fly widening (one-shot use). */
   def dot(a: Column, b: Column): Column = dotD(toDouble(a), toDouble(b))
-
-  /** Squared L2 norm with on-the-fly widening (one-shot use). */
-  def norm2(a: Column): Column = norm2D(toDouble(a))
 
   /** cosine from precomputed double arrays + squared norms:
     * dot / sqrt(na2 * nb2) — single sqrt; precomputing the norms yields the

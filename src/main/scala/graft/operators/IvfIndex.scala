@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftCacheBridge, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -379,7 +379,7 @@ object IvfIndex {
       // consumes the in-memory cents, not the centroids files) — overlap
       // them so the tiny centroid write's job+commit latency hides under
       // the corpus-sized assignment pass (guide §2.6)
-      overlapped(cents.write.mode(SaveMode.Overwrite).parquet(s"$base/centroids")) {
+      overlapped(spark)(cents.write.mode(SaveMode.Overwrite).parquet(s"$base/centroids")) {
         assignTo(cents, e).write.mode(SaveMode.Overwrite)
           .partitionBy("cid").parquet(s"$base/assignments")
       }
@@ -387,13 +387,13 @@ object IvfIndex {
     new IvfIndex(base)
   }
 
-  /** Run `main` on the caller's thread while `side` runs on [[WriteEc]].
-    * `side` always finishes before this returns, so no write outlives a
-    * failed build; `main`'s exception wins, and `side`'s propagates when
-    * `main` succeeded.
+  /** Run `main` on the caller's thread while `side` runs on [[WriteEc]]
+    * under the caller's job-local properties. `side` always finishes before
+    * this returns, so no write outlives a failed build; `main`'s exception
+    * wins, and `side`'s propagates when `main` succeeded.
     */
-  private def overlapped(side: => Unit)(main: => Unit): Unit = {
-    val f = scala.concurrent.Future(side)(WriteEc)
+  private def overlapped(spark: SparkSession)(side: => Unit)(main: => Unit): Unit = {
+    val f = GraftCacheBridge.onPool(spark, WriteEc)(side)
     try main finally scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf)
     scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
   }
@@ -522,7 +522,7 @@ object IvfIndex {
       // codebooks (driver-sized) and codes (corpus-sized) writes are
       // independent — overlap them (guide §2.6), then read the codebooks
       // back once into the serving memo
-      overlapped {
+      overlapped(spark) {
         (for (mi <- 0 until m; c <- 0 until ks) yield (mi, c, cb(mi)(c).toSeq))
           .toDF("m", "c", "cw").repartition(1)
           .write.mode(SaveMode.Overwrite).parquet(s"$base/codebooks")

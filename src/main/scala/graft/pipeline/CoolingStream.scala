@@ -5,7 +5,7 @@ import java.time.LocalDate
 import org.apache.spark.sql.{Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.sources.{ColdStore, ParquetPaymentsSource}
+import graft.sources.{ColdStore, FsUtil, ParquetPaymentsSource}
 
 /** Structured-Streaming driver for the cooling pipeline — the
   * Trigger.AvailableNow form of the reference's hourly single-flight
@@ -25,26 +25,31 @@ import graft.sources.{ColdStore, ParquetPaymentsSource}
   *  - **catch-up on demand**: `Trigger.AvailableNow` drains everything
   *    present, then terminates — re-launching on any cadence (cron, the
   *    next Airflow, …) picks up newly landed months (`catchup=False`);
-  *  - **restart recovery**: offsets live in the write-ahead log, and the
-  *    [[Watermark]] file is kept INSIDE the checkpoint directory, so one
-  *    recovery root restores both. A batch that crashes mid-run replays
-  *    on restart; `runOnce`'s ordering (idempotent export → read-only
-  *    reconcile → watermark advance as the commit → idempotent drop,
-  *    finished by the next run when cut short) makes the replay converge
-  *    to the same end state, year by year.
+  *  - **restart recovery**: the [[Watermark]] file, kept in the checkpoint
+  *    directory, is the only recovery state. Every launch starts the stream
+  *    with an empty stream log, so a launch over a non-empty hot store
+  *    always fires one batch, and that batch resumes at the watermark's
+  *    year. `runOnce`'s ordering (idempotent export → read-only reconcile
+  *    → watermark advance as the commit → idempotent drop, finished by the
+  *    next run when cut short) makes a run cut short anywhere converge on
+  *    the next launch, year by year.
   *
   * The batch's row content is deliberately never materialized — the file
-  * source is a checkpointed work *signal* (which files have been seen),
-  * while the DAG reads the hot store through the same batch scan the
-  * driver loop uses. At 100 TB the signal stream stays a metadata-only
-  * listing; no data flows through the streaming plan itself.
+  * source is a work *signal* (the hot store has files), while the DAG
+  * reads the hot store through the same batch scan the driver loop uses.
+  * A stream log kept across launches would hold every file already seen
+  * and fire no batch, leaving years below a raised `stopBeforeYear` hot.
+  * At 100 TB the signal stream stays a metadata-only listing; no data
+  * flows through the streaming plan itself.
   */
 object CoolingStream {
 
-  /** Drain-and-stop cooling run. Cools every fully-landed year from the
-    * watermark (persisted at `checkpointDir/watermark.json`, initialized
-    * to `startDate` on first run) up to but excluding `stopBeforeYear`.
-    * Returns the (year, rowsExported, diffCount) of each completed run.
+  /** Drain-and-stop cooling run. Cools, year by year from the watermark
+    * (persisted at `checkpointDir/watermark.json`, initialized to
+    * `startDate` on first run), every year that still has a hot partition,
+    * up to but excluding `stopBeforeYear`; a partly landed year cools with
+    * the months it has. Returns the (year, rowsExported, diffCount) of each
+    * completed run.
     *
     * `onYearCooled` fires after each year's advance and drop
     * (observability; CoolingStreamSpec's crash injection).
@@ -66,6 +71,7 @@ object CoolingStream {
     wm.initIfAbsent(startDate)
     val pipeline = new CoolingPipeline(source, new ColdStore(coldPath), wm)
 
+    FsUtil.delete(spark, s"$checkpointDir/stream")
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
     val q = spark.readStream
       .schema(source.schema.add("pmonth", org.apache.spark.sql.types.StringType))

@@ -11,7 +11,7 @@ import graft.sources.{ColdStore, ParquetPaymentsSource}
 
 /** The Trigger.AvailableNow cooling runner must (a) cool every targeted
   * year through the streaming trigger, (b) survive a crash between years
-  * — the failed micro-batch replays on restart and resumes from the
+  * — a relaunch, also one with a later stop year, resumes from the
   * checkpointed watermark, not from scratch — and (c) land the exact
   * golden federation grid of /root/reference/img/YQ_Federation_Query.png
   * that ReferenceScaleSpec produces with the plain driver loop.
@@ -41,8 +41,8 @@ class CoolingStreamSpec extends AnyFunSuite {
     assert(src.listPartitions(spark, "payments_y2021").nonEmpty, "2021 must survive the crash")
     assert(new Watermark(s"$root/ckpt/watermark.json").year == 2021)
 
-    // Restart on the same checkpoint: the failed batch replays and the
-    // run resumes at 2021 — cooling exactly the remaining two years.
+    // Restart on the same checkpoint: the run resumes at the watermark,
+    // 2021 — cooling exactly the remaining two years.
     val resumed = CoolingStream.runAvailableNow(spark, s"$root/hot", s"$root/cold",
       s"$root/ckpt", start, stopBeforeYear = 2023)
     assert(resumed.map(r => (r._1, r._2, r._3)) ==
@@ -60,5 +60,23 @@ class CoolingStreamSpec extends AnyFunSuite {
     assert(fed == Seq(
       (2020, "s3", 527040L), (2021, "s3", 525600L), (2022, "s3", 525600L),
       (2023, "pg", 525600L), (2024, "pg", 527040L), (2025, "pg", 44640L)))
+  }
+
+  test("a relaunch with a later stop year cools the years an earlier launch left hot") {
+    val root = Files.createTempDirectory("graft-coolstream-relaunch").toString
+    PaymentsGenerator.writeHotStore(spark, s"$root/hot", "2020-01-01", months = 37)
+    val start = LocalDate.parse("2020-01-01")
+    def launch(stop: Int) = CoolingStream.runAvailableNow(spark, s"$root/hot", s"$root/cold",
+      s"$root/ckpt", start, stopBeforeYear = stop)
+
+    assert(launch(2021) == Seq((2020, 527040L, 0L)))
+    // every hot file was already seen by the first launch: the second must
+    // still fire a batch, or 2021 and 2022 stay hot behind the watermark
+    assert(launch(2023) == Seq((2021, 525600L, 0L), (2022, 525600L, 0L)))
+    assert(new Watermark(s"$root/ckpt/watermark.json").year == 2023)
+    val src = new ParquetPaymentsSource(s"$root/hot")
+    assert(src.listPartitions(spark, "payments_y2021").isEmpty, "2021 should be dropped")
+    // a year with any hot partition cools, not only a fully landed one
+    assert(launch(Int.MaxValue) == Seq((2023, 44640L, 0L)))
   }
 }
