@@ -3,7 +3,7 @@ package graft
 import java.lang.ref.WeakReference
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.{DataFrame, GraftCacheBridge}
+import org.apache.spark.sql.{DataFrame, GraftCacheBridge, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one owner of materialized intermediates: every cache and every
@@ -63,6 +63,22 @@ object Intermediates {
       System.err.println(
         "WARN graft: Intermediates.release found no LogicalRDD leaf to unpersist — " +
           "checkpoint blocks stay resident (plan: " + df.queryExecution.analyzed.nodeName + ")")
+  }
+
+  /** Collect a frame whose size is bounded by a parameter (centroid
+    * tables, codebooks), never by the data, onto the driver. At most
+    * `maxRows + 1` rows are fetched; more than `maxRows` throws
+    * [[ContractRefusedException]] naming `what` and the bound, so nothing
+    * data-sized reaches the driver. Nothing is registered for release:
+    * the rows are plain driver state.
+    */
+  def local(df: DataFrame, maxRows: Int, what: String): Array[Row] = {
+    val rows = df.limit(maxRows + 1).collect()
+    if (rows.length > maxRows)
+      throw new ContractRefusedException(
+        s"$what refused: more than $maxRows rows would be collected to the driver " +
+          s"(bound $maxRows). A driver-held relation must stay parameter-sized.")
+    rows
   }
 
   /** Release every registered cache and checkpoint. Non-blocking: block

@@ -9,12 +9,17 @@ import org.apache.spark.sql.SparkSession
   * the plan-hygiene audit trail (pushdown, pruning, broadcast, codegen)
   * that PlanSpec asserts programmatically.
   *
+  * The file is reproducible: the session is pinned to `local[4]` (so the
+  * shuffle-partition count is 4 on every host) and [[masked]] replaces
+  * run-local ids, so a change's PLANS.md diff shows only the plans it
+  * changed and a rerun on the same code rewrites the file byte-identical.
+  *
   * Run: `java -cp "target/scala-2.13/classes:SPARK_JARS" graft.Plans [sfDir]`
   */
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.prepare(GraftSession.local("graft-plans"))
+    val spark = GraftSession.prepare(GraftSession.local("graft-plans", cores = 4))
 
     val headline = Seq(
       "q1_export_project", "q2_exclusion_join", "q3_federation",
@@ -62,10 +67,24 @@ object Plans {
       sb ++= s"\n## $name\n\n```\n${collapseRepeats(formatted(df))}```\n"
     }
     sb ++= reconcileSections(spark)
-    Files.write(Paths.get("PLANS.md"), sb.toString.getBytes(StandardCharsets.UTF_8))
+    Files.write(Paths.get("PLANS.md"), masked(sb.toString).getBytes(StandardCharsets.UTF_8))
     println(s"wrote PLANS.md (${headline.size + 2} plans)")
     spark.stop()
   }
+
+  /** Replace the ids that differ between two runs of the same plan:
+    * lambda-variable counters (`x_203`) and expression ids (`id#106L`),
+    * exchange `plan_id`s, JVM lambda class names and object identity
+    * hashes of literals (`[B@1a2b3c`), RDD ids, the application id inside per-run
+    * index paths, temp-directory suffixes and written files' UUIDs.
+    */
+  private def masked(plans: String): String =
+    Seq("\\b([xyz])_\\d+#" -> "$1_n#", "#\\d+" -> "#x", "plan_id=\\d+" -> "plan_id=x",
+        "\\$Lambda\\$\\d+/0x[0-9a-f]+" -> "\\$Lambda\\$x",
+        "@[0-9a-f]{5,8}\\b" -> "@x", "RDD\\[\\d+\\]" -> "RDD[x]", "local-\\d+" -> "local-x",
+        "(graft-[a-z0-9-]*-)\\d{6,}" -> "$1x",
+        "part-(\\d+)-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}" -> "part-$1-x")
+      .foldLeft(plans) { case (s, (re, to)) => s.replaceAll(re, to) }
 
   /** Collapse repeated subtree prints in a formatted plan. The tree
     * printer expands SHARED subtrees (cached relations, reused exchanges)
@@ -124,7 +143,7 @@ object Plans {
     val payments = PaymentsGenerator.payments(spark, "2020-01-01", months = 3)
       .select(keys.map(org.apache.spark.sql.functions.col): _*)
     Seq("hot", "cold").foreach(side => ScaleJoins.writeBucketed(payments, s"plans_${side}_b", "id", 4))
-    val dir = Files.createTempDirectory("graft-plans-q2").toString
+    val dir = Files.createTempDirectory("graft-plans-q2-").toString
     Seq("hot", "cold").foreach(side => payments.write.parquet(s"$dir/$side"))
     def section(title: String, hot: org.apache.spark.sql.DataFrame, cold: org.apache.spark.sql.DataFrame) = {
       val frame = ExclusionJoin.diffCountFrame(hot, cold, keys)

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftCacheBridge, SaveMode, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, GraftCacheBridge, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,7 +15,8 @@ import graft.functions.Vectors
   *
   * Layout under `base/`:
   *  - `centroids/`   — (cid INT, cv ARRAY<DOUBLE>, cn2 DOUBLE): k cell
-  *    centers, tiny (k ≤ thousands), always broadcast.
+  *    centers in one file. k is a parameter (≤ [[IvfIndex.MaxCells]]), so
+  *    the table is driver state: it reaches every task as a literal.
   *  - `assignments/` — (vec_id, v ARRAY<DOUBLE>, n2, cid) PARTITIONED BY
   *    cid: the inverted lists ARE the partition layout, so probing p of k
   *    cells reads p/k of the data — partition pruning does the "inverted
@@ -21,12 +24,13 @@ import graft.functions.Vectors
   *
   * Build = deterministic seeding (bottom-k by md5 of vec_id — a uniform
   * pseudo-random pick that is reproducible across runs/engines) + a few
-  * Lloyd iterations done as DataFrame ops: assignment is a broadcast join
-  * + per-vector rank-1 window; the centroid update is posexplode →
-  * (cid, dim) average → collect_list, i.e. two narrow shuffles per round,
-  * each O(n·d) — the standard distributed k-means step. At 100 TB you
-  * raise `cells` (lists stay ~constant size) and the build cost stays
-  * linear per iteration.
+  * Lloyd iterations. Assignment is one per-row expression against the
+  * centroid literal ([[IvfIndex.assignTo]]: no join, no shuffle); the
+  * centroid update is posexplode → (cid, dim) average → collect_list,
+  * two shuffles of k·d cells per round, collected back to the driver
+  * through [[graft.Intermediates.local]] — the standard distributed
+  * k-means step. At 100 TB you raise `cells` (lists stay ~constant size)
+  * and the build cost stays linear per iteration.
   */
 final class IvfIndex private (val base: String) {
 
@@ -42,8 +46,17 @@ final class IvfIndex private (val base: String) {
     if (m != null) m else IvfIndex.readCodebooks(spark, base)
   }
 
-  private def centroids(spark: SparkSession): DataFrame =
-    spark.read.parquet(s"$base/centroids")
+  /** Centroids written by THIS instance's build or recenter — the
+    * [[cbMemo]] rule: [[IvfIndex.load]] never sets it (a loaded index
+    * reads `centroids/`), and recenter, the only verb that rewrites the
+    * table, refreshes it after its write.
+    */
+  @volatile private[operators] var centMemo: IvfIndex.Cents = null
+
+  private def centroids(spark: SparkSession): IvfIndex.Cents = {
+    val m = centMemo
+    if (m != null) m else IvfIndex.readCentroids(spark, base)
+  }
 
   private def assignments(spark: SparkSession): DataFrame =
     spark.read.parquet(s"$base/assignments")
@@ -105,7 +118,7 @@ final class IvfIndex private (val base: String) {
     *     hot when its list exceeds `hotFactor` × the mean.
     *  2. RE-LLOYD only the hot cells' vectors (a partition-pruned read of
     *     exactly those directories): deterministic bottom-k-by-md5
-    *     seeding and the same broadcast-assign/average iteration as
+    *     seeding and the same per-row-assign/average iteration as
     *     [[IvfIndex.build]], with Σ⌈size/mean⌉ new sub-cells numbered
     *     ABOVE every existing cid, so no live cell's id or files are
     *     reused.
@@ -119,8 +132,9 @@ final class IvfIndex private (val base: String) {
     *     itself stays a full-rebuild decision: codebooks are corpus
     *     statistics, not per-cell state).
     *
-    * Centroids are rewritten (always tiny): cold rows verbatim, hot rows
-    * replaced by the new sub-cells. Returns the retired hot cids (empty =
+    * Centroids are rewritten from driver rows (≤ [[IvfIndex.MaxCells]],
+    * refused above it before anything is written): cold rows verbatim, hot
+    * rows replaced by the new sub-cells. Returns the retired hot cids (empty =
     * nothing hot, nothing touched).
     *
     * SINGLE-MAINTAINER VERB (the vacuum contract): between the append of
@@ -179,36 +193,30 @@ final class IvfIndex private (val base: String) {
       .where(col("cid").isin(hotIds.map(Integer.valueOf): _*))
       .select("vec_id", "v", "n2")
       .transform(Intermediates.checkpoint) // the delete below must not re-trigger this scan
-    var cents = vecs
-      .withColumn("h", md5(concat(lit("ivf:rc:"), col("vec_id").cast("string"))))
-      .orderBy("h").limit(nNew)
-      .withColumn("cid", (row_number().over(
-        Window.partitionBy(substring(col("h"), 1, 0)).orderBy("h")) + maxCid).cast("int"))
-      .select(col("cid"), col("v").as("cv"), col("n2").as("cn2"))
-      .transform(Intermediates.checkpoint)
-    (1 to lloydIters).foreach { _ =>
-      cents = Intermediates.checkpoint(IvfIndex.lloydStep(cents, vecs))
-    }
+    // cold centroids verbatim + new sub-cells, all driver rows: the
+    // overwrite below never reads the path it writes
+    val cold = centroids(spark).filterNot(c => hotIds.contains(c._1))
+    if (cold.size + nNew > IvfIndex.MaxCells)
+      throw new graft.ContractRefusedException(
+        s"recenter of $base refused: ${cold.size} cold + $nNew new cells exceed the " +
+          s"driver-held centroid bound ${IvfIndex.MaxCells}; rebuild with fewer cells.")
+    var cents = IvfIndex.seeds(vecs, "ivf:rc:", nNew, maxCid + 1)
+    (1 to lloydIters).foreach(_ => cents = IvfIndex.lloydStep(cents, vecs))
+    val newCentroids = (cold ++ cents).sortBy(_._1)
 
-    // cold centroids verbatim + new sub-cells; materialize before the
-    // overwrite below reads-while-writing the same path
-    val newCentroids = centroids(spark)
-      .where(!col("cid").isin(hotIds.map(Integer.valueOf): _*))
-      .unionByName(cents)
-      .transform(Intermediates.checkpoint)
-
-    val reassigned = Intermediates.checkpoint(IvfIndex.assignTo(cents, vecs))
+    val reassigned = IvfIndex.assignTo(cents, vecs)
     reassigned.write.mode(SaveMode.Append).partitionBy("cid").parquet(s"$base/assignments")
     val hasPq = graft.sources.FsUtil.listDir(spark, base).contains("codebooks")
     if (hasPq) {
-      val cb = IvfIndex.readCodebooks(spark, base)
+      val cb = codebooks(spark)
       reassigned.select(col("vec_id"),
           call_function("graft_pq_encode", IvfIndex.unitQ,
             typedLit(cb.map(_._1).flatMap(_.flatMap(_.toSeq)).toSeq), lit(cb.length)).as("codes"),
           col("cid"))
         .write.mode(SaveMode.Append).partitionBy("cid").parquet(s"$base/codes")
     }
-    newCentroids.write.mode(SaveMode.Overwrite).parquet(s"$base/centroids")
+    IvfIndex.writeCentroids(spark, newCentroids, base)
+    centMemo = newCentroids
     hotIds.foreach { id =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$base/assignments/cid=$id"), true)
       if (hasPq) fs.delete(new org.apache.hadoop.fs.Path(s"$base/codes/cid=$id"), true)
@@ -225,8 +233,8 @@ final class IvfIndex private (val base: String) {
   def query(spark: SparkSession, queries: DataFrame, probes: Int = 2, topK: Int = 10): DataFrame = {
     graft.GraftSession.prepare(spark)
     val probed = probeCells(spark, queries, probes)
-    val cellIds = probed.select("cid").distinct().collect().map(_.getInt(0)) // ≤ k values
-    val lists = assignments(spark).where(col("cid").isin(cellIds.map(Integer.valueOf): _*))
+    val cellIds = probedIds(probed)
+    val lists = assignments(spark).where(col("cid").isin(cellIds: _*))
 
     probed.join(lists, Seq("cid")).where(col("vec_id") =!= col("qid"))
       .withColumn("cos", Vectors.cosinePre(col("qv"), col("qn2"), col("v"), col("n2")))
@@ -237,16 +245,20 @@ final class IvfIndex private (val base: String) {
   }
 
   /** Shared coarse probe: (qid, qv, qn2, cid) — the `probes` nearest cells
-    * per query by centroid cosine.
+    * per query by centroid cosine, one generator row per probed cell.
     */
-  private def probeCells(spark: SparkSession, queries: DataFrame, probes: Int): DataFrame =
-    queries.select(col("qid"), col("v"), Vectors.norm2D(col("v")).as("qn2"))
-      .join(broadcast(centroids(spark)))
-      .withColumn("ccos", Vectors.cosinePre(col("v"), col("qn2"), col("cv"), col("cn2")))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy("qid").orderBy(col("ccos").desc, col("cid"))))
-      .where(col("crank") <= probes)
-      .select(col("qid"), col("v").as("qv"), col("qn2"), col("cid"))
+  private[graft] def probeCells(spark: SparkSession, queries: DataFrame, probes: Int): DataFrame = {
+    val cents = centroids(spark)
+    queries.select(col("qid"), col("v").as("qv"), Vectors.norm2D(col("v")).as("qn2"))
+      .select(col("qid"), col("qv"), col("qn2"),
+        IvfIndex.probedCells(cents, col("qv"), col("qn2"), probes).as("cid"))
+  }
+
+  /** The union of probed cells (≤ k ids), pushed into the list scans as a
+    * partition filter. */
+  private def probedIds(probed: DataFrame): Array[Integer] =
+    Intermediates.local(probed.select("cid").distinct(), IvfIndex.MaxCells,
+      s"probed cells of $base").map(r => Integer.valueOf(r.getInt(0)))
 
   /** IVFPQ serve: ADC candidate scan over the product-quantized `codes/`
     * lists (written by [[IvfIndex.buildPq]]), exact cosine re-rank of the
@@ -274,9 +286,8 @@ final class IvfIndex private (val base: String) {
               reRank: Int = 32): DataFrame = {
     graft.GraftSession.prepare(spark)
     val probed = probeCells(spark, queries, probes)
-    val cellIds = probed.select("cid").distinct().collect().map(_.getInt(0)) // ≤ k values
-    def pruned(sub: String) =
-      spark.read.parquet(s"$base/$sub").where(col("cid").isin(cellIds.map(Integer.valueOf): _*))
+    val cellIds = probedIds(probed)
+    def pruned(sub: String) = spark.read.parquet(s"$base/$sub").where(col("cid").isin(cellIds: _*))
 
     // per-query LUT: ‖q̂_m − cw_{m,c}‖² for every (m, c), flattened row-major —
     // M·Ks doubles computed once per query row, before the candidate join
@@ -306,12 +317,17 @@ final class IvfIndex private (val base: String) {
 
 object IvfIndex {
 
-  /** Bounded pool for parallel parquet-footer metadata reads (recenter's
-    * hot-cell detection) — footers are immutable, so concurrent opens are
-    * safe, and 16-way keeps a thousands-of-files index's detection pass
-    * I/O-bound instead of latency-bound. Lazy: a JVM that never calls
-    * recenter never creates the pool's threads.
+  /** A driver-held centroid table: (cid, cv, cn2) per cell, by cid. */
+  type Cents = Seq[(Int, Seq[Double], Double)]
+
+  /** Bound on a driver-held centroid table (every collect goes through
+    * [[Intermediates.local]] with it). The table ships as a literal inside
+    * every assignment and probe task, so the bound is a per-task byte
+    * budget: 1,024 cells × 768 dims × 8 B ≈ 6.3 MB at dim 768 (the
+    * battery's 16 cells × 64 dims are 8 KB).
     */
+  val MaxCells = 1024
+
   /** Two-thread pool for overlapping a build's independent write actions
     * (guide §2.6) — concurrent jobs from one SparkSession are supported;
     * descriptions/groups are thread-local so UI labels stay correct.
@@ -328,6 +344,12 @@ object IvfIndex {
           t
         }))
 
+  /** Bounded pool for parallel parquet-footer metadata reads (recenter's
+    * hot-cell detection) — footers are immutable, so concurrent opens are
+    * safe, and 16-way keeps a thousands-of-files index's detection pass
+    * I/O-bound instead of latency-bound. Lazy: a JVM that never calls
+    * recenter never creates the pool's threads.
+    */
   private[operators] lazy val FooterPool =
     new scala.collection.parallel.ForkJoinTaskSupport(
       new java.util.concurrent.ForkJoinPool(16))
@@ -340,51 +362,49 @@ object IvfIndex {
       .select(col("vec_id"), Vectors.toDouble(col("embedding")).as("v"))
       .withColumn("n2", Vectors.norm2D(col("v")))
 
-    // deterministic uniform seeding: bottom-`cells` by key hash (the n6
-    // rule), COLLECTED as a TakeOrdered — per-partition top-k map-side,
-    // driver merge of ≤ cells rows — and re-emitted as a local relation.
-    // The previous eager-checkpoint form materialized Sort+GlobalLimit
-    // through AQE's single reduce partition: one full-sort task on an
-    // otherwise idle cluster (the slowest single stage of every s7/s9
-    // build, 1.1 s at sf0.1). cid numbering = ascending md5 order, done
-    // driver-side over the collected rows — identical to the old rank
-    // window (hex md5 compares the same in UTF8String and Java String).
-    val seedRows = e
-      .withColumn("h", md5(concat(lit("ivf:"), col("vec_id").cast("string"))))
-      .orderBy("h").limit(cells)
-      .select(col("h"), col("v"), col("n2"))
-      .collect()
-    val centSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("cid",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("cv",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType),
-        nullable = true),
-      org.apache.spark.sql.types.StructField("cn2",
-        org.apache.spark.sql.types.DoubleType, nullable = true)))
-    var cents = spark.createDataFrame(
-      java.util.Arrays.asList(seedRows.sortBy(_.getString(0)).zipWithIndex.map {
-        case (r, i) => org.apache.spark.sql.Row(i, r.getSeq[Double](1), r.getDouble(2))
-      }: _*), centSchema)
+    var cents = seeds(e, "ivf:", cells, 0)
+    (1 to lloydIters).foreach(_ => cents = lloydStep(cents, e))
+    // the two persisted outputs are independent of each other (the
+    // assignment reads the driver-held cents, not the centroids file) —
+    // overlap them so the tiny centroid write's job+commit latency hides
+    // under the corpus-sized assignment pass (guide §2.6)
+    overlapped(spark)(writeCentroids(spark, cents, base)) {
+      assignTo(cents, e).write.mode(SaveMode.Overwrite)
+        .partitionBy("cid").parquet(s"$base/assignments")
+    }
+    val idx = new IvfIndex(base)
+    idx.centMemo = cents
+    idx
+  }
 
-    // the round checkpoints live until both writes below are done, and
-    // are released on every exit path
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      (1 to lloydIters).foreach { _ =>
-        cents = Intermediates.checkpoint(lloydStep(cents, e)) // truncate lineage between rounds
-        rounds += cents
+  /** Deterministic uniform seeding over (vec_id, v, n2): bottom-`n` by
+    * md5(prefix ‖ vec_id) (the n6 rule), COLLECTED as a TakeOrdered —
+    * per-partition top-k map-side, driver merge of ≤ n rows. cids are
+    * `firstCid` upward in ascending md5 order, numbered driver-side (hex
+    * md5 compares the same in UTF8String and Java String).
+    */
+  private def seeds(e: DataFrame, prefix: String, n: Int, firstCid: Int): Cents =
+    Intermediates.local(
+      e.withColumn("h", md5(concat(lit(prefix), col("vec_id").cast("string"))))
+        .orderBy("h").limit(n)
+        .select(col("h"), col("v"), col("n2")), MaxCells, s"IVF seeds ($prefix)")
+      .sortBy(_.getString(0)).toSeq.zipWithIndex.map {
+        case (r, i) => (firstCid + i, r.getSeq[Double](1), r.getDouble(2))
       }
-      // the two persisted outputs are independent of each other (assignTo
-      // consumes the in-memory cents, not the centroids files) — overlap
-      // them so the tiny centroid write's job+commit latency hides under
-      // the corpus-sized assignment pass (guide §2.6)
-      overlapped(spark)(cents.write.mode(SaveMode.Overwrite).parquet(s"$base/centroids")) {
-        assignTo(cents, e).write.mode(SaveMode.Overwrite)
-          .partitionBy("cid").parquet(s"$base/assignments")
-      }
-    } finally rounds.foreach(Intermediates.release)
-    new IvfIndex(base)
+
+  /** The persisted centroid table, read back through [[Intermediates.local]]. */
+  private def readCentroids(spark: SparkSession, base: String): Cents =
+    Intermediates.local(spark.read.parquet(s"$base/centroids").select("cid", "cv", "cn2"),
+      MaxCells, s"IVF centroids at $base").toSeq.map(centRow).sortBy(_._1)
+
+  private def centRow(r: Row) = (r.getInt(0), r.getSeq[Double](1), r.getDouble(2))
+
+  /** One file: the table is a local relation, which would otherwise write
+    * one file per task. */
+  private def writeCentroids(spark: SparkSession, cents: Cents, base: String): Unit = {
+    import spark.implicits._
+    cents.toDF("cid", "cv", "cn2").coalesce(1)
+      .write.mode(SaveMode.Overwrite).parquet(s"$base/centroids")
   }
 
   /** Run `main` on the caller's thread while `side` runs on [[WriteEc]]
@@ -399,37 +419,53 @@ object IvfIndex {
   }
 
   /** One Lloyd update: assign, then per-(cid, dim) average back into
-    * centroid vectors — shared by [[build]] and [[IvfIndex.recenter]]'s
-    * local re-fit.
+    * centroid vectors, collected to the driver — shared by [[build]] and
+    * [[IvfIndex.recenter]]'s local re-fit. A cell no vector is assigned to
+    * drops out.
     */
-  private def lloydStep(cents: DataFrame, e: DataFrame): DataFrame =
-    assignTo(cents, e)
-      .select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy("cid", "dim").agg(avg("x").as("x"))
-      .groupBy("cid").agg(array_sort(collect_list(struct(col("dim"), col("x")))).as("dx"))
-      .select(col("cid"), transform(col("dx"), s => s.getField("x")).as("cv"))
-      .withColumn("cn2", Vectors.norm2D(col("cv")))
+  private def lloydStep(cents: Cents, e: DataFrame): Cents =
+    Intermediates.local(
+      assignTo(cents, e)
+        .select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
+        .groupBy("cid", "dim").agg(avg("x").as("x"))
+        .groupBy("cid").agg(array_sort(collect_list(struct(col("dim"), col("x")))).as("dx"))
+        .select(col("cid"), transform(col("dx"), s => s.getField("x")).as("cv"))
+        .withColumn("cn2", Vectors.norm2D(col("cv"))), MaxCells, "IVF Lloyd round")
+      .toSeq.map(centRow).sortBy(_._1)
 
-  /** Nearest-centroid assignment: broadcast join + argmax aggregation over
-    * (vec_id, v, n2) rows — the one step build iterations, the final
-    * assignment write, and incremental [[IvfIndex.append]] all share.
-    *
-    * `max_by` over the (ccos, −cid) ordering struct picks exactly the row
-    * the previous rank-1 window did (max cosine, ties to the lowest cid;
-    * Spark's struct ordering and its sort ordering agree on doubles
-    * including the NaN-greatest rule) — but it PARTIALLY AGGREGATES
-    * map-side, so the vec_id exchange ships one row per vector instead of
-    * one per (vector, centroid) — k× less shuffle (guide §2.3) — and the
-    * per-partition sort the window needed disappears.
+  /** Per-cell (ccos, ncid = −cid) structs of one vector (v, n2) against a
+    * driver-held centroid table, shipped as one literal array of
+    * (cid, cv, cn2) structs (`cid` is INT for an index, BIGINT for s3's
+    * vec_id cells). Struct order is the cell ranking every IVF path
+    * shares: highest cosine first (NaN greatest; a zero norm's cosine is
+    * NULL with ANSI off and ranks last, and throws with ANSI on), ties to
+    * the lowest cid.
     */
-  private def assignTo(cents: DataFrame, e: DataFrame): DataFrame =
-    e.join(broadcast(cents))
-      .withColumn("ccos", Vectors.cosinePre(col("v"), col("n2"), col("cv"), col("cn2")))
-      .groupBy("vec_id")
-      .agg(max_by(struct(col("v"), col("n2"), col("cid")),
-        struct(col("ccos"), (-col("cid")).cast("int"))).as("best"))
-      .select(col("vec_id"), col("best.v").as("v"), col("best.n2").as("n2"),
-        col("best.cid").as("cid"))
+  private def cellScores[C: TypeTag](cents: Seq[(C, Seq[Double], Double)],
+                                     v: Column, n2: Column): Column =
+    transform(typedLit(cents), c => struct(
+      Vectors.cosinePre(v, n2, c.getField("_2"), c.getField("_3")).as("ccos"),
+      (-c.getField("_1")).as("ncid")))
+
+  /** Generator of the `probes` nearest cells' ids, best first — the
+    * per-query probe list as a per-row sort of [[cellScores]].
+    */
+  private[graft] def probedCells[C: TypeTag](cents: Seq[(C, Seq[Double], Double)],
+                                             v: Column, n2: Column, probes: Int): Column =
+    explode(transform(slice(sort_array(cellScores(cents, v, n2), asc = false), 1, probes),
+      s => -s.getField("ncid")))
+
+  /** Nearest-centroid assignment of (vec_id, v, n2) rows: a per-row argmax
+    * over [[cellScores]] — no join, no shuffle — shared by build
+    * iterations, the final assignment write, incremental
+    * [[IvfIndex.append]], recenter and s3.
+    *
+    * Contract: `vec_id` is unique in `e`; every input row yields one
+    * output row.
+    */
+  private[graft] def assignTo[C: TypeTag](cents: Seq[(C, Seq[Double], Double)],
+                                          e: DataFrame): DataFrame =
+    e.withColumn("cid", -array_max(cellScores(cents, col("v"), col("n2"))).getField("ncid"))
 
   /** Quantized unit vector: round(x / ‖v‖ · 10⁴) as integer-valued
     * doubles — the s5 fixed-point discipline applied to the PQ domain, so
@@ -465,7 +501,7 @@ object IvfIndex {
     * layout as the raw lists, so the ADC scan partition-prunes
     * identically while reading M ints instead of d doubles per row.
     * Codebooks persist under `codebooks/` (M·Ks·ds doubles — always
-    * driver/broadcast-sized).
+    * driver-sized).
     *
     * Scale: each training round is one argmin scan + one (M·Ks·ds)-cell
     * aggregation — at 100 TB train on a corpus sample (PQ codebooks are
@@ -488,7 +524,7 @@ object IvfIndex {
     val uqDf = Intermediates.checkpoint(
       assigned.select(col("vec_id"), col("cid"), unitQ.as("uq")))
 
-    try {
+    val trained = try {
       // init: the ks lowest vec_ids' quantized unit subvectors (driver-sized)
       val seeds = uqDf.orderBy("vec_id").limit(ks)
         .select(col("uq"))
@@ -519,22 +555,22 @@ object IvfIndex {
       }
 
       import spark.implicits._
-      // codebooks (driver-sized) and codes (corpus-sized) writes are
-      // independent — overlap them (guide §2.6), then read the codebooks
-      // back once into the serving memo
+      // codebooks (driver-sized, one file) and codes (corpus-sized) writes
+      // are independent — overlap them (guide §2.6)
       overlapped(spark) {
         (for (mi <- 0 until m; c <- 0 until ks) yield (mi, c, cb(mi)(c).toSeq))
-          .toDF("m", "c", "cw").repartition(1)
+          .toDF("m", "c", "cw").coalesce(1)
           .write.mode(SaveMode.Overwrite).parquet(s"$base/codebooks")
       } {
         uqDf.select(col("vec_id"), codesOf(cb, col("uq")).as("codes"), col("cid"))
           .write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(s"$base/codes")
       }
+      cb
     } finally Intermediates.release(uqDf)
     // the codebooks this instance just trained and wrote — serving through
     // the memo skips one read+collect job per query batch (disk stays the
     // source of truth: a LOADED index still reads it)
-    idx.cbMemo = readCodebooks(spark, base)
+    idx.cbMemo = trained.toSeq.zipWithIndex
     idx
   }
 

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Intermediates
 import graft.functions.Vectors
+import graft.operators.IvfIndex
 import graft.sources.Tables
 
 /** Approximate-nearest-neighbor search over the `embeddings` corpus
@@ -272,14 +273,6 @@ object SimilarityQueries {
       .orderBy("qid", "rank")
   }
 
-  /** IVF ANN: an inverted-file index with deterministic "centroids" (the
-    * first 16 vectors — a k-means stand-in that keeps the oracle exact).
-    * Every vector is assigned to its nearest centroid (the inverted
-    * lists); a query probes its `Probes` nearest cells and ranks only
-    * their members. At scale the assignment is one broadcast-map pass and
-    * the probe is an equi-join on cell id — the IVF trade: recall vs the
-    * fraction of lists touched.
-    */
   /** (vec_id, v, n2) widened embeddings — the scaffolding every s-family
     * query rebuilds (s1/s2/s3/s8, kmFit's quantized view, the streaming
     * IVF serve twin). Cached ONCE per corpus through
@@ -300,33 +293,37 @@ object SimilarityQueries {
     ivfEmb(spark, dir).where(col("vec_id") < Cells)
       .select(col("vec_id").as("cid"), col("v").as("cv"), col("n2").as("cn2"))
 
+  /** [[ivfCents]] as driver rows, the table the IVF ranking functions
+    * score against. */
+  private def ivfCentRows(spark: SparkSession, dir: String): Seq[(Long, Seq[Double], Double)] =
+    Intermediates.local(ivfCents(spark, dir), IvfIndex.MaxCells, "s3 IVF centroids")
+      .toSeq.map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
+
   /** (vec_id, v, n2, cid) nearest-centroid inverted-list assignment —
     * the static side the streaming serve twin joins against. */
-  private[graft] def ivfAssigned(spark: SparkSession, dir: String): DataFrame = {
-    val cents = ivfCents(spark, dir)
-    ivfEmb(spark, dir).join(broadcast(cents))
-      .withColumn("ccos", Vectors.cosinePre(col("v"), col("n2"), col("cv"), col("cn2")))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cid"))))
-      .where(col("crank") === 1)
-      .select(col("vec_id"), col("v"), col("n2"), col("cid"))
-  }
+  private[graft] def ivfAssigned(spark: SparkSession, dir: String): DataFrame =
+    IvfIndex.assignTo(ivfCentRows(spark, dir), ivfEmb(spark, dir))
 
+  /** IVF ANN: an inverted-file index with deterministic "centroids" (the
+    * first 16 vectors — a k-means stand-in that keeps the oracle exact).
+    * Every vector is assigned to its nearest centroid (the inverted
+    * lists); a query probes its `Probes` nearest cells and ranks only
+    * their members. The assignment and the probe list are per-row maps
+    * against the driver-held centroid literal, and the candidate scan is
+    * an equi-join on cell id — the IVF trade: recall vs the fraction of
+    * lists touched.
+    */
   def s3IvfTopK(spark: SparkSession, dir: String): DataFrame = {
     graft.GraftSession.prepare(spark)
     val e = ivfEmb(spark, dir)
-    val cents = ivfCents(spark, dir)
+    val cents = ivfCentRows(spark, dir)
 
-    // nearest-centroid assignment (rank 1) and per-query probe list (rank <= Probes)
-    def cellRank(of: DataFrame, idCol: String) = of.join(broadcast(cents))
-      .withColumn("ccos", Vectors.cosinePre(col("v"), col("n2"), col("cv"), col("cn2")))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(idCol).orderBy(col("ccos").desc, col("cid"))))
-
-    val assigned = cellRank(e, "vec_id").where(col("crank") === 1)
-      .select(col("vec_id"), col("v"), col("n2"), col("cid"))
-    val probes = cellRank(e.where(col("vec_id") < QueryBlock), "vec_id").where(col("crank") <= Probes)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("n2").as("qn2"), col("cid"))
+    // nearest-centroid assignment and per-query probe list: per-row
+    // expressions against the driver-held centroids
+    val assigned = IvfIndex.assignTo(cents, e)
+    val probes = e.where(col("vec_id") < QueryBlock)
+      .select(col("vec_id").as("qid"), col("v").as("qv"), col("n2").as("qn2"),
+        IvfIndex.probedCells(cents, col("v"), col("n2"), Probes).as("cid"))
 
     val scored = probes.join(assigned, Seq("cid")).where(col("vec_id") =!= col("qid"))
       .withColumn("cos", Vectors.cosinePre(col("qv"), col("qn2"), col("v"), col("n2")))
@@ -425,7 +422,6 @@ object SimilarityQueries {
     */
   def s7IncrementalIvf(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.Text
-    import graft.operators.IvfIndex
     val e = Tables.embeddings(spark, dir)
     val isInc = pmod(Text.md5Long(concat(lit("s7:"), col("vec_id").cast("string"))), lit(10L)) === 0
     // per-application suffix: two concurrent sessions (bench + gate) get
@@ -495,7 +491,6 @@ object SimilarityQueries {
     * re-rank returns byte-identical answers to the uncompressed index.
     */
   def s9IvfPq(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.IvfIndex
     val e = Tables.embeddings(spark, dir)
     val idxPath = s"${sys.props("java.io.tmpdir")}/graft_s9_${math.abs(dir.hashCode)}_" +
       spark.sparkContext.applicationId
@@ -622,8 +617,8 @@ object SimilarityQueries {
         best.getField("cid").as("cid"), best.getField("dist").as("dist"))
     } else {
       // adaptive-k path: the literal expression tree would explode past a
-      // few dozen centroids, so assignment becomes the IvfIndex shape —
-      // broadcast the k-row centroid table and argmin per vector. Two
+      // few dozen centroids, so assignment becomes a join — broadcast
+      // the k-row centroid table and argmin per vector. Two
       // probe-driven choices: dist² expands to |v|² + |c|² − 2·v·c with
       // the codegen'd graft_dot (an interpreted zip_with/aggregate HOF per
       // candidate row measured 205× at the 100× probe) — every term is an

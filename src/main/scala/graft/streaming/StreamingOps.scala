@@ -583,33 +583,25 @@ object StreamingOps extends Serializable {
 
   /** Streaming ANN serving — the s3 IVF probe path on a stream of query
     * vectors (the RAG-serving shape): probe-cell selection is a STATELESS
-    * per-row map against the broadcast centroid array (k·dim metadata —
+    * per-row map against the driver-held centroid literal (k·dim metadata —
     * the same state every distributed k-means keeps), candidates come
     * from a stateless stream-static equi-join against the persisted
     * inverted lists, and the per-query top-k folds in
     * `flatMapGroupsWithState` (a query's candidates all derive from its
     * one input row, so they co-arrive in one micro-batch and the fold
-    * emits immediately — no cross-batch state). Cell ranking replicates
-    * `graft_dot` op-for-op (same index order, same IEEE doubles,
-    * `Math.sqrt` correctly rounded), so results are BIT-IDENTICAL to the
-    * batch operator — the spec asserts full equality including cosines.
+    * emits immediately — no cross-batch state). Cell ranking is the batch
+    * operator's own expression ([[graft.operators.IvfIndex.probedCells]]),
+    * so results are BIT-IDENTICAL to s3 — the spec asserts full equality
+    * including cosines.
     */
   def ivfServeStream(spark: SparkSession, queries: Dataset[VecQuery],
                      cents: Array[(Long, Array[Double], Double)],
                      assigned: DataFrame, probes: Int, topK: Int): Dataset[ServeHit] = {
     import spark.implicits._
-    def cosS(a: Array[Double], n2a: Double, b: Array[Double], n2b: Double): Double = {
-      val n = math.min(a.length, b.length)
-      var s = 0.0; var i = 0
-      while (i < n) { s += a(i) * b(i); i += 1 }
-      s / math.sqrt(n2a * n2b)
-    }
-    val probed = queries.flatMap { q =>
-      cents.map { case (cid, cv, cn2) => (cid, cosS(q.qv, q.qn2, cv, cn2)) }
-        .sortBy { case (cid, c) => (-c, cid) }
-        .take(probes)
-        .map { case (cid, _) => (q.qid, q.qv, q.qn2, cid) }
-    }.toDF("qid", "qv", "qn2", "cid")
+    import graft.operators.IvfIndex
+    val rows = cents.toSeq.map { case (cid, cv, cn2) => (cid, cv.toSeq, cn2) }
+    val probed = queries.select(col("qid"), col("qv"), col("qn2"),
+      IvfIndex.probedCells(rows, col("qv"), col("qn2"), probes).as("cid"))
     val scored = probed.join(assigned, Seq("cid"))
       .where(col("vec_id") =!= col("qid"))
       .withColumn("cos", graft.functions.Vectors.cosinePre(

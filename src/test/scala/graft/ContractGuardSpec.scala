@@ -30,6 +30,13 @@ class ContractGuardSpec extends AnyFunSuite {
     assert(boom.getMessage.contains("k-means upper boundary"), boom.getMessage)
   }
 
+  test("Intermediates.local: a frame at its bound reaches the driver; one row past it is refused, naming the bound") {
+    val ids = spark.range(10).toDF("id")
+    assert(Intermediates.local(ids, 10, "ten ids").map(_.getLong(0)).sorted.toSeq == (0L until 10L))
+    val boom = intercept[ContractRefusedException](Intermediates.local(ids, 9, "ten ids"))
+    assert(boom.getMessage.contains("ten ids") && boom.getMessage.contains("bound 9"), boom.getMessage)
+  }
+
   test("d5 pair ceiling: a corpus whose identical-fingerprint pairs alone exceed the output budget is refused") {
     import spark.implicits._
     // every doc identical → one simhash value → hamming-0 pairs alone are

@@ -78,6 +78,24 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(got.exceptAll(reloaded).isEmpty && reloaded.exceptAll(got).isEmpty)
   }
 
+  test("assignment and probe frames are per-row maps: no Exchange, BroadcastExchange or Window") {
+    index
+    val cents = spark.read.parquet(s"$base/centroids").collect()
+      .map(r => (r.getAs[Int]("cid"), r.getAs[Seq[Double]]("cv"), r.getAs[Double]("cn2"))).toSeq
+    val e = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), Vectors.toDouble(col("embedding")).as("v"))
+      .withColumn("n2", Vectors.norm2D(col("v")))
+    Seq(
+      "assignment" -> IvfIndex.assignTo(cents, e),
+      "probe" -> index.probeCells(spark, queries, probes = 2),
+      "s3 assignment" -> graft.queries.SimilarityQueries.ivfAssigned(spark, dir)
+    ).foreach { case (name, df) =>
+      df.collect() // the executed plan below is the final adaptive plan
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange") && !plan.contains("Window"), s"$name plan:\n$plan")
+    }
+  }
+
   test("a failed build propagates its write error and leaves no checkpoint resident") {
     // the base path is an existing regular file: the corpus-sized
     // assignments write fails, and so does the overlapped centroid write
@@ -266,6 +284,15 @@ class IvfIndexSpec extends AnyFunSuite {
     val preCount = spark.read.parquet(s"$b/assignments").count()
     idx.recenter(spark, hotFactor = 4.0, lloydIters = 1)
     assert(spark.read.parquet(s"$b/assignments").count() == preCount)
+  }
+
+  test("centroid memo: build, recenter, then query on one instance == the reloaded index's query") {
+    val b = Files.createTempDirectory("graft-ivf-memo").toString + "/idx"
+    val idx = driftedIndex(b, pq = false)
+    assert(idx.recenter(spark, hotFactor = 2.0, lloydIters = 2).nonEmpty)
+    val got = idx.query(spark, queries, probes = 2, topK = TopK)
+    val reloaded = IvfIndex.load(b).query(spark, queries, probes = 2, topK = TopK)
+    assert(got.exceptAll(reloaded).isEmpty && reloaded.exceptAll(got).isEmpty)
   }
 
   test("recenter keeps codes/ in lockstep: moved vectors re-encode under frozen codebooks, PQ serve stays exact") {

@@ -6,12 +6,14 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 
-import graft.operators.{ConnectedComponents, RangeJoin, Upsert}
+import graft.functions.Vectors
+import graft.operators.{ConnectedComponents, IvfIndex, RangeJoin, Upsert}
 
 /** Property-based checks for the round-2 operators: each against a pure
   * Scala model on arbitrary inputs — band joins against the quadratic
   * filter, upsert against the map-override model (plus idempotence),
-  * connected components against union-find.
+  * connected components against union-find, IVF cell ranking against the
+  * join + aggregate / window form it replaced.
   */
 object OperatorProps extends Properties("graft-operators") {
 
@@ -191,4 +193,57 @@ object OperatorProps extends Properties("graft-operators") {
       val got = s2.collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
       got == aggStep(aggStep(aggStep(Map.empty, base), d1), d2)
     }
+
+  // --- IvfIndex cell ranking ---
+
+  // components from a tiny domain (signed zeros included) force exact
+  // cosine ties; the first centroid is always duplicated under the
+  // highest cid, and an all-zero vector (zero norm) is always present.
+  // Its cosine is a zero-divisor division: NULL with ANSI off, which is
+  // the ordering case under test (with ANSI on both forms throw)
+  private val compGen = Gen.oneOf(-1.0, -0.0, 0.0, 0.5, 1.0, 2.0)
+  private val vec3Gen = Gen.listOfN(3, compGen)
+  private val ivfGen = for {
+    cs <- Gen.choose(2, 5).flatMap(Gen.listOfN(_, vec3Gen))
+    vs <- Gen.choose(1, 8).flatMap(Gen.listOfN(_, vec3Gen))
+    probes <- Gen.choose(1, 7)
+  } yield (cs :+ cs.head, List(0.0, 0.0, 0.0) :: vs, probes)
+
+  private def ansiOff[T](body: => T): T = {
+    val was = sc_.conf.get("spark.sql.ansi.enabled")
+    sc_.conf.set("spark.sql.ansi.enabled", "false")
+    try body finally sc_.conf.set("spark.sql.ansi.enabled", was)
+  }
+
+  property("IVF per-row assignment and probe lists == broadcast join + max_by / row_number") =
+    forAll(ivfGen) { case (cs, vs, probes) => ansiOff {
+      val spark = sc_
+      import spark.implicits._
+      val cents = cs.zipWithIndex.map { case (v, i) => (i, v, v.map(x => x * x).foldLeft(0.0)(_ + _)) }
+      val e = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "v")
+        .withColumn("n2", Vectors.norm2D(col("v")))
+
+      // the reference form: every (vector, centroid) pair, then an argmax
+      // aggregate and a rank window
+      val scored = e.join(broadcast(cents.toDF("cid", "cv", "cn2")))
+        .withColumn("ccos", Vectors.cosinePre(col("v"), col("n2"), col("cv"), col("cn2")))
+      val wantCell = scored.groupBy("vec_id")
+        .agg(max_by(col("cid"), struct(col("ccos"), -col("cid"))).as("cid"))
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      val wantProbes = scored
+        .withColumn("crank", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy("vec_id")
+            .orderBy(col("ccos").desc, col("cid"))))
+        .where(col("crank") <= probes)
+        .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("crank"), r.getAs[Int]("cid")))
+        .groupBy(_._1).map { case (id, rs) => id -> rs.sortBy(_._2).map(_._3).toSeq }
+
+      val gotCell = IvfIndex.assignTo(cents, e).select("vec_id", "cid")
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      // explode keeps each row's probe list in rank order
+      val gotProbes = e.select(col("vec_id"), IvfIndex.probedCells(cents, col("v"), col("n2"), probes))
+        .collect().map(r => r.getLong(0) -> r.getInt(1))
+        .groupBy(_._1).map { case (id, rs) => id -> rs.map(_._2).toSeq }
+      gotCell == wantCell && gotProbes == wantProbes
+    }}
 }
