@@ -3,11 +3,11 @@ package graft
 import java.lang.ref.WeakReference
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.{DataFrame, GraftCacheBridge, Row}
+import org.apache.spark.sql.{DataFrame, GraftCacheBridge, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** The one owner of materialized intermediates: every cache and every
-  * checkpoint in the engine is made here and released here.
+/** The one owner of materialized intermediates: every cache, checkpoint
+  * and scratch directory in the engine is made here and released here.
   *
   * Release happens at FAMILY boundaries ([[releaseAll]], called by Bench,
   * Verify and ScaleProbe between query modules), so executor blocks never
@@ -65,6 +65,16 @@ object Intermediates {
           "checkpoint blocks stay resident (plan: " + df.queryExecution.analyzed.nodeName + ")")
   }
 
+  /** A scratch directory that lives until the next [[releaseAll]]: any
+    * earlier copy of `path` is deleted now, and the directory is deleted
+    * at the release (s7/s9's rehearsal indexes). Returns `path`.
+    */
+  def directory(spark: SparkSession, path: String): String = {
+    graft.sources.FsUtil.delete(spark, path)
+    releases.add(() => graft.sources.FsUtil.delete(spark, path))
+    path
+  }
+
   /** Collect a frame whose size is bounded by a parameter (centroid
     * tables, codebooks), never by the data, onto the driver. At most
     * `maxRows + 1` rows are fetched; more than `maxRows` throws
@@ -81,8 +91,9 @@ object Intermediates {
     rows
   }
 
-  /** Release every registered cache and checkpoint. Non-blocking: block
-    * removal runs asynchronously, so the caller never waits on it. */
+  /** Release every registered cache, checkpoint and directory.
+    * Non-blocking for blocks: their removal runs asynchronously, so the
+    * caller waits only on the directory deletes. */
   def releaseAll(): Unit =
     Iterator.continually(releases.poll()).takeWhile(_ != null).foreach(_())
 

@@ -69,6 +69,7 @@ object Plans {
     sb ++= reconcileSections(spark)
     Files.write(Paths.get("PLANS.md"), masked(sb.toString).getBytes(StandardCharsets.UTF_8))
     println(s"wrote PLANS.md (${headline.size + 2} plans)")
+    Intermediates.releaseAll() // deletes s7's and s9's rehearsal indexes
     spark.stop()
   }
 

@@ -5,8 +5,10 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, GraftCacheBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** One timed rep of a query and the layers its time went to. The rep is
   * the only place the engine times a query: Bench, ABTime and ScaleProbe
@@ -29,20 +31,28 @@ import org.apache.spark.sql.{DataFrame, GraftCacheBridge, SparkSession}
   *  - `serial_stages`: stages of at most 4 tasks whose run time sums to at
   *    least 0.4 s — the signature of AQE coalescing a stage's work onto a
   *    few cores (at `local[4]` a 4-task stage already fills the cores, so
-  *    compare the count across runs at one core count).
+  *    compare the count across runs at one core count);
+  *  - `compiles`, `compile_s`: classes Janino compiled during the rep and
+  *    the time it took, read from JVM-wide counters
+  *    (`CodegenMetrics.METRIC_COMPILATION_TIME`, `CodeGenerator.compileTime`).
+  *    The delta belongs to the rep only because reps run one at a time; in
+  *    local mode it includes executor-side compiles. A class found in
+  *    Spark's codegen cache is not compiled and not counted.
   */
 private[graft] final case class Rep(
     rows: Long, startMs: Long, wallS: Double, buildS: Double, buildJobs: Long,
     analysisS: Double, optimizationS: Double, planningS: Double,
     jobs: Long, stages: Long, tasks: Long, taskRunS: Double,
-    shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long, serialStages: Long) {
+    shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long, serialStages: Long,
+    compiles: Long, compileS: Double) {
 
   def fields: Seq[(String, Any)] = Seq(
     "rows" -> rows, "wall_s" -> wallS, "build_s" -> buildS, "build_jobs" -> buildJobs,
     "analysis_s" -> analysisS, "optimization_s" -> optimizationS, "planning_s" -> planningS,
     "jobs" -> jobs, "stages" -> stages, "tasks" -> tasks, "task_run_s" -> taskRunS,
     "shuffle_read_bytes" -> shuffleReadBytes, "shuffle_write_bytes" -> shuffleWriteBytes,
-    "spill_bytes" -> spillBytes, "serial_stages" -> serialStages)
+    "spill_bytes" -> spillBytes, "serial_stages" -> serialStages,
+    "compiles" -> compiles, "compile_s" -> compileS)
 
   /** One JSON object: the `lead` fields, then [[fields]]. */
   def json(lead: (String, Any)*): String = (lead ++ fields).map {
@@ -69,6 +79,7 @@ private[graft] object Rep {
     val layers = layersOn(sc)
     val id = ids.incrementAndGet()
     layers.open(id)
+    val (compiles0, compileNs0) = (compileCount, CodeGenerator.compileTime)
     val startMs = System.currentTimeMillis()
     val t0 = System.nanoTime()
     try {
@@ -85,12 +96,15 @@ private[graft] object Rep {
       Rep(rows, startMs, (t2 - t0) / 1e9, (t1 - t0) / 1e9, a.buildJobs,
         phase("analysis"), phase("optimization"), phase("planning"),
         a.jobs, a.stages, a.tasks, a.runMs / 1e3, a.shuffleRead, a.shuffleWrite, a.spill,
-        a.load.values.count { case (n, ms) => n <= 4 && ms >= 400 }.toLong)
+        a.load.values.count { case (n, ms) => n <= 4 && ms >= 400 }.toLong,
+        compileCount - compiles0, (CodeGenerator.compileTime - compileNs0) / 1e9)
     } finally {
       sc.setLocalProperty(Key, null)
       layers.forget(id)
     }
   }
+
+  private def compileCount = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Counters of one rep. */
   private final class Agg {

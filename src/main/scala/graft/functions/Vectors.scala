@@ -37,13 +37,19 @@ object Vectors {
     * dot / sqrt(na2 * nb2) — single sqrt; precomputing the norms yields the
     * same IEEE operations on the same values, so results are bit-identical
     * to the inline form (and to the DuckDB oracle).
+    *
+    * The division is `try_divide`: a zero norm (an all-zero embedding)
+    * gives a NULL cosine under ANSI mode too, instead of a
+    * `[DIVIDE_BY_ZERO]` that fails the whole query. Any other divisor runs
+    * the same IEEE division as `/`.
     */
   def cosinePre(a: Column, na2: Column, b: Column, nb2: Column): Column =
-    dotD(a, b) / sqrt(na2 * nb2)
+    try_divide(dotD(a, b), sqrt(na2 * nb2))
 
-  /** cosine(a, b) one-shot (tests / single pairs). */
+  /** cosine(a, b) one-shot (tests / single pairs); NULL on a zero norm,
+    * as [[cosinePre]]. */
   def cosine(a: Column, b: Column): Column = {
     val (da, db) = (toDouble(a), toDouble(b))
-    dotD(da, db) / sqrt(norm2D(da) * norm2D(db))
+    cosinePre(da, norm2D(da), db, norm2D(db))
   }
 }

@@ -438,8 +438,7 @@ object IvfIndex {
     * (cid, cv, cn2) structs (`cid` is INT for an index, BIGINT for s3's
     * vec_id cells). Struct order is the cell ranking every IVF path
     * shares: highest cosine first (NaN greatest; a zero norm's cosine is
-    * NULL with ANSI off and ranks last, and throws with ANSI on), ties to
-    * the lowest cid.
+    * NULL and ranks last), ties to the lowest cid.
     */
   private def cellScores[C: TypeTag](cents: Seq[(C, Seq[Double], Double)],
                                      v: Column, n2: Column): Column =

@@ -425,12 +425,13 @@ object SimilarityQueries {
     val e = Tables.embeddings(spark, dir)
     val isInc = pmod(Text.md5Long(concat(lit("s7:"), col("vec_id").cast("string"))), lit(10L)) === 0
     // per-application suffix: two concurrent sessions (bench + gate) get
-    // disjoint rehearsal index dirs instead of racing delete/build/serve
-    val idxPath = s"${sys.props("java.io.tmpdir")}/graft_s7_${math.abs(dir.hashCode)}_" +
-      spark.sparkContext.applicationId
-    // dynamic partition overwrite only replaces partitions the build writes
-    // into — wipe the rehearsal path so a rerun can't keep stale appends
-    graft.sources.FsUtil.delete(spark, idxPath)
+    // disjoint rehearsal index dirs instead of racing delete/build/serve.
+    // Dynamic partition overwrite only replaces partitions the build writes
+    // into, so the rehearsal path starts empty (a rerun can't keep stale
+    // appends) and is deleted at the family's release.
+    val idxPath = Intermediates.directory(spark,
+      s"${sys.props("java.io.tmpdir")}/graft_s7_${math.abs(dir.hashCode)}_" +
+        spark.sparkContext.applicationId)
     val idx = IvfIndex.build(spark, e.where(!isInc), idxPath, cells = Cells, lloydIters = 0)
     idx.append(spark, e.where(isInc))
     val queries = e.where(col("vec_id") < QueryBlock)
@@ -492,9 +493,9 @@ object SimilarityQueries {
     */
   def s9IvfPq(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val idxPath = s"${sys.props("java.io.tmpdir")}/graft_s9_${math.abs(dir.hashCode)}_" +
-      spark.sparkContext.applicationId
-    graft.sources.FsUtil.delete(spark, idxPath)
+    val idxPath = Intermediates.directory(spark,
+      s"${sys.props("java.io.tmpdir")}/graft_s9_${math.abs(dir.hashCode)}_" +
+        spark.sparkContext.applicationId)
     val idx = IvfIndex.buildPq(spark, e, idxPath, cells = Cells, lloydIters = 0)
     val queries = e.where(col("vec_id") < QueryBlock)
       .select(col("vec_id").as("qid"), Vectors.toDouble(col("embedding")).as("v"))

@@ -67,6 +67,18 @@ class CacheLifecycleSpec extends AnyFunSuite {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
+  test("releaseAll deletes s7's and s9's rehearsal index directories") {
+    val appId = spark.sparkContext.applicationId
+    def left = new java.io.File(sys.props("java.io.tmpdir")).listFiles().toSeq
+      .map(_.getName)
+      .filter(n => (n.startsWith("graft_s7_") || n.startsWith("graft_s9_")) && n.endsWith(s"_$appId"))
+    SimilarityQueries.s7IncrementalIvf(spark, sfDir).count()
+    SimilarityQueries.s9IvfPq(spark, sfDir).count()
+    assert(left.size == 2, s"expected s7's and s9's index directories, found ${left.mkString(", ")}")
+    Intermediates.releaseAll()
+    assert(left.isEmpty, s"index directories left after releaseAll(): ${left.mkString(", ")}")
+  }
+
   test("no bare materialization outside the owner: src/main has no cache/persist/localCheckpoint calls") {
     val allowed = Set("Intermediates.scala", "Expectations.scala")
     val bare = """localCheckpoint\(|\.cache\(\)|\.persist\(""".r

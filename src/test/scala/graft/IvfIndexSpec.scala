@@ -96,6 +96,26 @@ class IvfIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("a zero vector's cosine is NULL under the session default: s3's assignment and probe list rank it last") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    import spark.implicits._
+    // s3's shape: BIGINT cell ids
+    val cents = Seq((3L, Seq(1.0, 0.0), 1.0), (7L, Seq(0.0, 1.0), 1.0))
+    val e = Seq((0L, Seq(0.0, 0.0)), (1L, Seq(0.0, 2.0))).toDF("vec_id", "v")
+      .withColumn("n2", Vectors.norm2D(col("v")))
+    val cell = IvfIndex.assignTo(cents, e).select("vec_id", "cid").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // every cosine of the zero vector is NULL, so the tie goes to the lowest cid
+    assert(cell == Map(0L -> 3L, 1L -> 7L))
+    val probes = e.select(col("vec_id"), IvfIndex.probedCells(cents, col("v"), col("n2"), 2))
+      .collect().map(r => r.getLong(0) -> r.getLong(1))
+      .groupBy(_._1).map { case (id, rs) => id -> rs.map(_._2).toSeq }
+    assert(probes == Map(0L -> Seq(3L, 7L), 1L -> Seq(7L, 3L)))
+    val cos = Seq((Seq(0f, 0f), Seq(1f, 0f)), (Seq(0f, 2f), Seq(0f, 1f))).toDF("a", "b")
+      .select(Vectors.cosine(col("a"), col("b"))).collect().map(r => Option(r.get(0)))
+    assert(cos.toSeq == Seq(None, Some(1.0)))
+  }
+
   test("a failed build propagates its write error and leaves no checkpoint resident") {
     // the base path is an existing regular file: the corpus-sized
     // assignments write fails, and so does the overlapped centroid write

@@ -199,8 +199,8 @@ object OperatorProps extends Properties("graft-operators") {
   // components from a tiny domain (signed zeros included) force exact
   // cosine ties; the first centroid is always duplicated under the
   // highest cid, and an all-zero vector (zero norm) is always present.
-  // Its cosine is a zero-divisor division: NULL with ANSI off, which is
-  // the ordering case under test (with ANSI on both forms throw)
+  // Its cosine is a zero-divisor division: NULL under the session default
+  // (ANSI on), which is the ordering case under test
   private val compGen = Gen.oneOf(-1.0, -0.0, 0.0, 0.5, 1.0, 2.0)
   private val vec3Gen = Gen.listOfN(3, compGen)
   private val ivfGen = for {
@@ -209,14 +209,8 @@ object OperatorProps extends Properties("graft-operators") {
     probes <- Gen.choose(1, 7)
   } yield (cs :+ cs.head, List(0.0, 0.0, 0.0) :: vs, probes)
 
-  private def ansiOff[T](body: => T): T = {
-    val was = sc_.conf.get("spark.sql.ansi.enabled")
-    sc_.conf.set("spark.sql.ansi.enabled", "false")
-    try body finally sc_.conf.set("spark.sql.ansi.enabled", was)
-  }
-
   property("IVF per-row assignment and probe lists == broadcast join + max_by / row_number") =
-    forAll(ivfGen) { case (cs, vs, probes) => ansiOff {
+    forAll(ivfGen) { case (cs, vs, probes) =>
       val spark = sc_
       import spark.implicits._
       val cents = cs.zipWithIndex.map { case (v, i) => (i, v, v.map(x => x * x).foldLeft(0.0)(_ + _)) }
@@ -245,5 +239,5 @@ object OperatorProps extends Properties("graft-operators") {
         .collect().map(r => r.getLong(0) -> r.getInt(1))
         .groupBy(_._1).map { case (id, rs) => id -> rs.map(_._2).toSeq }
       gotCell == wantCell && gotProbes == wantProbes
-    }}
+    }
 }
