@@ -47,7 +47,7 @@ final class JdbcPaymentsSource(
       */
     catalogQuery: String => String = JdbcPaymentsSource.pgCatalogQuery) extends PaymentsSource {
 
-  private def props: java.util.Properties = {
+  private[sources] def props: java.util.Properties = {
     val p = new java.util.Properties()
     if (user.nonEmpty) p.setProperty("user", user)
     if (password.nonEmpty) p.setProperty("password", password)
@@ -132,13 +132,6 @@ final class JdbcPartitionedPaymentsSource(
   private val flat = new JdbcPaymentsSource(url, "payments", user, password,
     catalogQuery = catalogQuery)
 
-  private def props: java.util.Properties = {
-    val p = new java.util.Properties()
-    if (user.nonEmpty) p.setProperty("user", user)
-    if (password.nonEmpty) p.setProperty("password", password)
-    p
-  }
-
   override def scan(spark: SparkSession): DataFrame = {
     val parts = listPartitions(spark, "payments_y")
     if (parts.isEmpty)
@@ -146,7 +139,7 @@ final class JdbcPartitionedPaymentsSource(
         // child tables carry the payments schema; reuse the parquet twin's
         new ParquetPaymentsSource("/nonexistent").schema)
     else
-      parts.map(t => spark.read.jdbc(url, t, props)).reduce(_ unionByName _)
+      parts.map(t => spark.read.jdbc(url, t, flat.props)).reduce(_ unionByName _)
   }
 
   override def listPartitions(spark: SparkSession, prefix: String): Seq[String] =

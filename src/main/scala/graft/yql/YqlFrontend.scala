@@ -103,6 +103,8 @@ object YqlFrontend {
   private def isIdent(t: String): Boolean =
     t.nonEmpty && (t.head.isLetter || t.head == '_') && t.forall(ch => ch.isLetterOrDigit || ch == '_')
 
+  private def strip(t: String): String = if (t.startsWith("`")) t.substring(1, t.length - 1) else t
+
   // ------------------------------------------------------------ statements
 
   private def splitStatements(ts: Vector[String]): Vector[Vector[String]] = {
@@ -296,7 +298,6 @@ object YqlFrontend {
     * innermost open group is a [[FromArgFns]] argument list.
     */
   private def rewriteTables(ts: Vector[String], resolver: YqlResolver): Vector[String] = {
-    def strip(t: String) = if (t.startsWith("`")) t.substring(1, t.length - 1) else t
     val out = Vector.newBuilder[String]
     // per open paren: (is a FROM-arg function call, in a FROM relation list);
     // a sentinel carries the statement-level flags
@@ -626,7 +627,6 @@ object YqlFrontend {
     * A WITHOUT not following a star is left for Spark's parser to reject.
     */
   private def rewriteWithout(ts: Vector[String]): Vector[String] = {
-    def strip(t: String) = if (t.startsWith("`")) t.substring(1, t.length - 1) else t
     val out = Vector.newBuilder[String]
     var i = 0
     while (i < ts.length) {
@@ -1011,7 +1011,6 @@ object YqlFrontend {
       i += 1
     }
     items :+= cur.result()
-    def strip(t: String) = if (t.startsWith("`")) t.substring(1, t.length - 1) else t
     val names = items.map { it =>
       var asIdx = -1
       var d = 0

@@ -79,20 +79,35 @@ class CacheLifecycleSpec extends AnyFunSuite {
     assert(left.isEmpty, s"index directories left after releaseAll(): ${left.mkString(", ")}")
   }
 
-  test("no bare materialization outside the owner: src/main has no cache/persist/localCheckpoint calls") {
-    val allowed = Set("Intermediates.scala", "Expectations.scala")
-    val bare = """localCheckpoint\(|\.cache\(\)|\.persist\(""".r
+  /** Every `src/main/scala` line matching `pattern`, as `path:line: text`,
+    * in files whose name `allowed` does not hold.
+    */
+  private def srcMainHits(allowed: String => Boolean, pattern: scala.util.matching.Regex): List[String] = {
     val walk = Files.walk(Paths.get("src/main/scala"))
-    val hits = try walk.iterator.asScala
+    try walk.iterator.asScala
       .filter(p => p.toString.endsWith(".scala") && !allowed(p.getFileName.toString))
       .flatMap { p =>
         Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if bare.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+          case (line, i) if pattern.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
         }
       }.toList
     finally walk.close()
+  }
+
+  test("no bare materialization outside the owner: src/main has no cache/persist/localCheckpoint calls") {
+    val allowed = Set("Intermediates.scala", "Expectations.scala")
+    val hits = srcMainHits(allowed, """localCheckpoint\(|\.cache\(\)|\.persist\(""".r)
     assert(hits.isEmpty,
       "materialize through graft.Intermediates (cache/checkpoint), not directly:\n" +
         hits.mkString("\n"))
+  }
+
+  test("no timing loop outside the rep: src/main reads no clock outside the allowlist") {
+    val allowed = Map(
+      "Rep.scala" -> "the rep: every timing goes through graft.Rep.time",
+      "Bench.scala" -> "the pass start offset the rep's start_s is measured from",
+      "VersionedStore.scala" -> "a wait deadline, not a timing")
+    val hits = srcMainHits(allowed.contains, """System\.nanoTime|System\.currentTimeMillis""".r)
+    assert(hits.isEmpty, "time a query through graft.Rep.time, not a clock of its own:\n" + hits.mkString("\n"))
   }
 }

@@ -315,6 +315,28 @@ class PipelineSpec extends AnyFunSuite {
     assert(f.restarted.runAll(spark) == Seq((2021, 44640L, 0L)))
   }
 
+  test("a lease held by another process refuses the run, and is freed when that process dies") {
+    val f = new CrashFixture("lease-process")
+    val want = f.hot2020
+    // one child JVM on the test classpath (the test JVM is forked)
+    val javaBin = ProcessHandle.current().info().command().get
+    val holder = new ProcessBuilder(javaBin, "-Xmx32m", "-cp", sys.props("java.class.path"),
+      "graft.LeaseHolder", f.wmFile).redirectError(ProcessBuilder.Redirect.INHERIT).start()
+    try {
+      val out = new java.io.BufferedReader(new java.io.InputStreamReader(holder.getInputStream))
+      assert(out.readLine() == "held")
+      val before = Files.readAllBytes(Paths.get(f.wmFile)).toSeq
+      val refused = intercept[IllegalStateException](f.restarted.runOnce(spark))
+      assert(refused.getMessage.contains(s"${f.wmFile}.lock"), refused.getMessage)
+      assert(Files.readAllBytes(Paths.get(f.wmFile)).toSeq == before)
+      assert(f.hot.listPartitions(spark, "payments_y").size == 13 && f.cold.years(spark).isEmpty)
+    } finally {
+      holder.destroyForcibly()
+      holder.waitFor()
+    }
+    f.restartConverges(want)
+  }
+
   test("a session at static partition-overwrite mode: cooling 2021 keeps cold 2020") {
     val f = new CrashFixture("static-overwrite")
     val want = f.hot2020
