@@ -61,6 +61,18 @@ object GraftSession {
       // first use, and every entry point builds its session here first.
       .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // Create file:// files without a process per file: without libhadoop,
+      // the stock local filesystem forks `chmod` for the mode of every file
+      // and directory it creates (s7's 16-cell index writes fork 117 per
+      // run) and `readlink` on every checkpoint rename; the graft classes
+      // apply the same modes through java.nio (graft.sources.LocalFileSystems).
+      // Fixed, not an option: Hadoop caches one FileSystem per scheme and
+      // user, not per conf, so the first file:// caller in a JVM decides the
+      // class every later caller gets, and every entry point builds its
+      // session here first.
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.GraftLocalFs].getName)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -4,7 +4,7 @@ import java.io.{File, IOException}
 import java.net.URI
 import java.nio.file.{Files, StandardCopyOption}
 
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.Path
 
 /** A Hadoop `FileSystem` with OBJECT-STORE semantics (`objstore://`) — the
   * fault-injection surface VersionedStore's commit protocol is claimed to
@@ -29,15 +29,16 @@ import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
   *    are unaffected.
   *  - **No append.** `append` throws, as on any object store.
   *
-  * Everything else delegates to [[RawLocalFileSystem]] (objects are plain
-  * local files; `RawLocal` rather than `Local` so no `.crc` shadow files
+  * Everything else delegates to [[NioRawLocalFileSystem]] (objects are plain
+  * local files, written without a `chmod` process per object; the raw
+  * filesystem rather than the checksummed one so no `.crc` shadow files
   * muddy directory listings). Register with
   * `hadoopConf.set("fs.objstore.impl", classOf[ObjectStoreFileSystem].getName)`
   * and address data as `objstore:///abs/path` — Spark's parquet
   * reader/writer, the committer, and VersionedStore then run unmodified
   * against rename-less storage.
   */
-final class ObjectStoreFileSystem extends RawLocalFileSystem {
+final class ObjectStoreFileSystem extends NioRawLocalFileSystem {
   import ObjectStoreFileSystem._
 
   override def getScheme: String = "objstore"

@@ -174,15 +174,21 @@ final class ParquetPaymentsSource(base: String) extends PaymentsSource {
       StructField("state", StringType, nullable = false)))
   }
 
-  override def scan(spark: SparkSession): DataFrame =
-    if (FsUtil.listDir(spark, base).exists(_.startsWith("pmonth=")))
+  /** Reads the listed `pmonth=` directories by name rather than through the
+    * glob `pmonth=*`: Spark probes a single path for a streaming sink's
+    * metadata log, and on a glob that probe fails and logs a WARN stack
+    * trace on every scan. */
+  override def scan(spark: SparkSession): DataFrame = {
+    val months = FsUtil.listDir(spark, base).filter(_.startsWith("pmonth="))
+    if (months.nonEmpty)
       spark.read
         .schema(schema.add("pmonth", org.apache.spark.sql.types.StringType))
         .option("basePath", base)
-        .parquet(s"$base/pmonth=*")
+        .parquet(months.map(m => s"$base/$m"): _*)
         .drop("pmonth")
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  }
 
   override def listPartitions(spark: SparkSession, prefix: String): Seq[String] =
     FsUtil.listDir(spark, base)

@@ -19,6 +19,7 @@ import graft.queries.{DedupQueries, SimilarityQueries, StatQueries}
   * use.
   */
 class CacheLifecycleSpec extends AnyFunSuite {
+  import CacheLifecycleSpec.srcMainHits
   lazy val spark = SparkTestSession.spark
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -79,21 +80,6 @@ class CacheLifecycleSpec extends AnyFunSuite {
     assert(left.isEmpty, s"index directories left after releaseAll(): ${left.mkString(", ")}")
   }
 
-  /** Every `src/main/scala` line matching `pattern`, as `path:line: text`,
-    * in files whose name `allowed` does not hold.
-    */
-  private def srcMainHits(allowed: String => Boolean, pattern: scala.util.matching.Regex): List[String] = {
-    val walk = Files.walk(Paths.get("src/main/scala"))
-    try walk.iterator.asScala
-      .filter(p => p.toString.endsWith(".scala") && !allowed(p.getFileName.toString))
-      .flatMap { p =>
-        Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if pattern.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
-        }
-      }.toList
-    finally walk.close()
-  }
-
   test("no bare materialization outside the owner: src/main has no cache/persist/localCheckpoint calls") {
     val allowed = Set("Intermediates.scala", "Expectations.scala")
     val hits = srcMainHits(allowed, """localCheckpoint\(|\.cache\(\)|\.persist\(""".r)
@@ -109,5 +95,22 @@ class CacheLifecycleSpec extends AnyFunSuite {
       "VersionedStore.scala" -> "a wait deadline, not a timing")
     val hits = srcMainHits(allowed.contains, """System\.nanoTime|System\.currentTimeMillis""".r)
     assert(hits.isEmpty, "time a query through graft.Rep.time, not a clock of its own:\n" + hits.mkString("\n"))
+  }
+}
+
+object CacheLifecycleSpec {
+  /** Every `src/main/scala` line matching `pattern`, as `path:line: text`,
+    * in files whose name `allowed` does not hold.
+    */
+  def srcMainHits(allowed: String => Boolean, pattern: scala.util.matching.Regex): List[String] = {
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    try walk.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && !allowed(p.getFileName.toString))
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if pattern.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    finally walk.close()
   }
 }
